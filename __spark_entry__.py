@@ -22879,12 +22879,9 @@ def q_stats_quantile_reg(spark, sf_dir):
     )
     # r11: both τ fits read the SAME (x, y) cells — collapse/collect
     # once (the _srcw contract) instead of twice
-    from cancer_survival_etl_spark.operators.driverfit import (
-        MAX_DRIVER_CELLS,
-    )
     from cancer_survival_etl_spark.operators.stats import _fit_cells
 
-    srcw = _fit_cells(cohort, ["x", "y"], max_cells=MAX_DRIVER_CELLS)
+    srcw = _fit_cells(cohort, ["x", "y"])
     fits = {
         tau: {
             r["term"]: r

@@ -139,21 +139,13 @@ def _als_driver_train(ratings: DataFrame, k: int, iters: int, reg: float):
     import numpy as np
 
     from cancer_survival_etl_spark.operators.driverfit import (
-        MAX_DRIVER_CELLS,
+        collect_bounded,
         round_half_up,
     )
 
-    if MAX_DRIVER_CELLS <= 0:
+    pdf = collect_bounded(ratings, ["_u", "_i", "_r"])
+    if pdf is None or len(pdf) == 0:
         return None
-    pdf = ratings.limit(MAX_DRIVER_CELLS + 1).toPandas()
-    if len(pdf) > MAX_DRIVER_CELLS or len(pdf) == 0:
-        return None
-    for c in ("_u", "_i", "_r"):
-        v = pdf[c]
-        if v.isnull().any():
-            return None
-        if v.dtype.kind == "f" and not np.isfinite(v.to_numpy()).all():
-            return None
 
     rv = pdf["_r"].to_numpy().astype(np.float64)
 

@@ -106,7 +106,6 @@ def logistic_train(
     import numpy as np
 
     from cancer_survival_etl_spark.operators.driverfit import (
-        cells_clean,
         collect_cells,
         round_half_up,
     )
@@ -117,12 +116,14 @@ def logistic_train(
         *[F.col(c).cast("double").alias(f"_x{j}") for j, c in enumerate(feats)],
         F.col(label_col).cast("double").alias("_y"),
     )
-    pdfc = collect_cells(proj, list(proj.columns))
-    if pdfc is not None and cells_clean(
-        pdfc, [f"_x{j}" for j in range(len(feats))] + ["_y"]
-    ):
+    pdfc = collect_cells(
+        proj, proj.columns, [f"_x{j}" for j in range(len(feats))] + ["_y"]
+    )
+    if pdfc is not None:
         wv = pdfc["_w"].to_numpy().astype(np.int64)
         n = int(wv.sum())
+        if n == 0:
+            raise ValueError("logistic_train: empty input")
         xv = [
             pdfc[f"_x{j}"].to_numpy().astype(np.float64)
             for j in range(len(feats))
@@ -144,6 +145,8 @@ def logistic_train(
         return [round(wj, 9) for wj in w]
 
     n = df.count()
+    if n == 0:
+        raise ValueError("logistic_train: empty input")
     y = F.col(label_col).cast("double")
     nano = F.lit(1000000000.0)
     for _ in range(iters):
@@ -204,7 +207,6 @@ def quantile_train(
     import numpy as np
 
     from cancer_survival_etl_spark.operators.driverfit import (
-        cells_clean,
         collect_cells,
         round_half_up,
     )
@@ -215,10 +217,10 @@ def quantile_train(
         *[F.col(c).cast("double").alias(f"_x{j}") for j, c in enumerate(feats)],
         F.col(y_col).cast("double").alias("_y"),
     )
-    pdfc = collect_cells(proj, list(proj.columns))
-    if pdfc is not None and cells_clean(
-        pdfc, [f"_x{j}" for j in range(len(feats))] + ["_y"]
-    ):
+    pdfc = collect_cells(
+        proj, proj.columns, [f"_x{j}" for j in range(len(feats))] + ["_y"]
+    )
+    if pdfc is not None:
         wv = pdfc["_w"].to_numpy().astype(np.int64)
         n = int(wv.sum())
         xv = [

@@ -1,33 +1,33 @@
-"""Driver-solve fast path for the iterative-fit family (r10).
+"""Driver-solve fast path for the iterative-fit family.
 
-The engine's fits (Cox/Fine-Gray/AFT/GLM Newton, EM, Fisher scoring)
-are sufficient-statistics algorithms: after subjects collapse to
-(x-pattern, duration, event)-style cells with counts, every iteration
-is a deterministic fold over the cell frame. Round-10 probe data
-(tools/probe_r10_opt.py) shows the per-iteration distributed fold is
-dominated by FIXED per-job cost at any realistic cell count — ~0.14 s
-on a 48-cell frame and ~1.4 s for the prefix-sum shape — so an
-8-iteration fit pays 1–15 s of pure scheduling/planning latency for
-microseconds of arithmetic.
+The engine's fits (Cox/Fine-Gray/AFT/GLM Newton, EM, Fisher scoring,
+the graph fixpoints) are sufficient-statistics folds: once subjects
+collapse to (x-pattern, duration, event)-style cells with counts, every
+iteration is a deterministic fold over the cell frame. Run on Spark,
+each iteration pays a fixed per-job latency for microseconds of
+arithmetic; run on the driver, the whole loop is one numpy pass.
 
-This module gives each fit a bounded-collect escape hatch: when the
-cell collapse is small (``max_cells``, the absorbing_chain bounded-
-collect pattern), the cells are collected ONCE and the whole loop runs
-on the driver in numpy on the IDENTICAL nano/pico lattice — the same
-pure-Python twin semantics the pytest suite already pins bit-equal to
-the distributed folds (tests/test_survival.py::_weibull_twin et al.).
-Per-cell terms are rounded to exact int64 lattice points before
-summation, so the driver solve is bit-identical to the distributed one
-and trivially partitioning-invariant. When the collapse exceeds
-``max_cells`` (continuous covariates at production scale), callers
-fall back to the unchanged distributed loop — the only cost is the one
-probe pass.
+This module owns the choice between the two paths. ``collect_bounded``
+is the one place that makes it: a single ``limit(MAX_DRIVER_CELLS + 1)``
+collect, the size check, and the null/non-finite screen the numpy twin
+needs. It returns the pandas frame (the caller runs its driver twin) or
+``None`` (the caller runs its distributed loop). ``collect_cells`` is
+the common ``groupBy(keys).count()`` collapse in front of it;
+``cells_clean`` is the screen on its own, for the GLM ``_fit_cells``
+collapse, whose distributed source depends on the size alone. The twins
+compute on the IDENTICAL nano/pico lattice — per-cell terms rounded to
+exact int64 points before summation — so both paths return
+bit-identical results under any partitioning (pinned in
+tests/test_driverfit.py).
 
-Scale posture (SCALE.md round 10): the ONE data-sized pass is the
-map-side-combined cell collapse; the collect is bounded by
-``max_cells`` (default 2^19 rows ≈ a few tens of MB at typical widths, far
-under spark.driver.maxResultSize), exactly the discipline the
-absorbing_chain / level-discovery collects already follow.
+One cap: ``MAX_DRIVER_CELLS`` bounds every driver collect and is read
+from this module at call time. One test switch: setting it to 0 (the
+``distributed`` fixture in tests/conftest.py) sends every fit down its
+distributed path without running a probe job.
+
+Collects that raise instead of falling back (the absorbing_chain cap,
+the ``max_x_patterns`` distinct-count guards) are not driver-solve
+choices and stay with their operators.
 """
 
 from __future__ import annotations
@@ -58,43 +58,42 @@ def round_half_up(x):
 
 
 def cells_clean(pdf, float_cols=(), notnull_cols=()):
-    """True when every ``float_cols`` entry is non-null and finite and
-    every ``notnull_cols`` entry is non-null — the guard a driver twin
-    needs before trusting ``.astype(int64)`` lattice arithmetic (NaN
-    becomes INT64_MIN garbage) and numpy group segmentation (each NaN
-    duration is its own lexsort group where Spark keeps ONE null
-    group). Callers fall back to the distributed fold on failure."""
+    """True when every ``float_cols`` entry is non-null and (for float
+    dtypes) finite and every ``notnull_cols`` entry is non-null — the
+    guard a driver twin needs before trusting ``.astype(int64)`` lattice
+    arithmetic (NaN becomes INT64_MIN garbage) and numpy group
+    segmentation (each NaN duration is its own lexsort group where Spark
+    keeps ONE null group). pandas counts NaN as null, so ``notnull_cols``
+    rejects NaN but lets ±inf through."""
     import numpy as np
 
     for c in float_cols:
         v = pdf[c]
-        if v.isnull().any() or not np.isfinite(
-            v.to_numpy(dtype=np.float64)
-        ).all():
+        if v.isnull().any() or (
+            v.dtype.kind == "f" and not np.isfinite(v.to_numpy()).all()
+        ):
             return False
-    for c in notnull_cols:
-        if pdf[c].isnull().any():
-            return False
-    return True
+    return not any(pdf[c].isnull().any() for c in notnull_cols)
 
 
-def collect_cells(
-    df: DataFrame,
-    key_cols,
-    max_cells: int = MAX_DRIVER_CELLS,
-    weight_alias: str = "_w",
-):
-    """Collapse ``df`` to (key..., count) cells and collect them when
-    bounded. ONE map-side-combined aggregate + ONE bounded collect
-    (``limit(max_cells + 1)`` guards the transfer — the
-    absorbing_chain pattern). Returns a pandas DataFrame or ``None``
-    when the collapse exceeds ``max_cells`` (caller falls back to the
-    distributed loop). ``max_cells <= 0`` disables the fast path
-    outright (used by tests to pin both paths equal)."""
-    if max_cells <= 0:
+def collect_bounded(df: DataFrame, float_cols=(), notnull_cols=()):
+    """Collect ``df`` to the driver when it holds at most
+    ``MAX_DRIVER_CELLS`` rows and passes the ``cells_clean`` screen;
+    else ``None`` (the caller runs its distributed loop). The probe is
+    ONE bounded job; the cap is read here at call time, and a cap
+    ``<= 0`` returns ``None`` without running it."""
+    if MAX_DRIVER_CELLS <= 0:
         return None
-    cells = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias(weight_alias))
-    pdf = cells.limit(max_cells + 1).toPandas()
-    if len(pdf) > max_cells:
+    pdf = df.limit(MAX_DRIVER_CELLS + 1).toPandas()
+    if len(pdf) > MAX_DRIVER_CELLS or not cells_clean(
+        pdf, float_cols, notnull_cols
+    ):
         return None
     return pdf
+
+
+def collect_cells(df: DataFrame, key_cols, float_cols=(), notnull_cols=()):
+    """Collapse ``df`` to (key..., ``_w`` count) cells — ONE
+    map-side-combined aggregate — and ``collect_bounded`` them."""
+    cells = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_w"))
+    return collect_bounded(cells, float_cols, notnull_cols)

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .driverfit import MAX_DRIVER_CELLS
+from .driverfit import collect_bounded
 
 
 def _cc_driver_labels(epdf):
@@ -98,12 +98,8 @@ def connected_components(
     # vertices from `nodes` stay DISTRIBUTED (one anti-join projection
     # — corpus-sized data never crosses the driver); unbounded or
     # null-carrying edge lists fall through to the unchanged loop.
-    _epdf = e.limit(MAX_DRIVER_CELLS + 1).toPandas()
-    if (
-        len(_epdf) <= MAX_DRIVER_CELLS
-        and not _epdf["u"].isnull().any()
-        and not _epdf["v"].isnull().any()
-    ):
+    _epdf = collect_bounded(e, notnull_cols=["u", "v"])
+    if _epdf is not None:
         from pyspark.sql.types import StructField, StructType
 
         lab = _cc_driver_labels(_epdf)
@@ -382,12 +378,8 @@ def triangle_count(
     # the single returned row is bit-identical to the three-count
     # aggregate below (pinned in tests/test_driverfit.py). Unbounded
     # edge lists fall through to the unchanged distributed joins.
-    _ep = e.limit(MAX_DRIVER_CELLS + 1).toPandas()
-    if (
-        len(_ep) <= MAX_DRIVER_CELLS
-        and not _ep["a"].isnull().any()
-        and not _ep["b"].isnull().any()
-    ):
+    _ep = collect_bounded(e, notnull_cols=["a", "b"])
+    if _ep is not None:
         av = _ep["a"].tolist()
         bv = _ep["b"].tolist()
         n_edges = len(av)
@@ -478,12 +470,8 @@ def k_core(
     # runs on the driver; one collect instead of a count probe + two
     # semi-joins per round. Bit-identical by integer arithmetic
     # (pinned in tests); unbounded/null edge lists use the loop below.
-    _epdf = e.limit(MAX_DRIVER_CELLS + 1).toPandas()
-    if (
-        len(_epdf) <= MAX_DRIVER_CELLS
-        and not _epdf["u"].isnull().any()
-        and not _epdf["v"].isnull().any()
-    ):
+    _epdf = collect_bounded(e, notnull_cols=["u", "v"])
+    if _epdf is not None:
         from pyspark.sql.types import (
             LongType,
             StructField,

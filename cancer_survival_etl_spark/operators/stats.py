@@ -23,7 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .driverfit import MAX_DRIVER_CELLS, cells_clean, round_half_up
+from .driverfit import cells_clean, collect_bounded, round_half_up
 
 
 def _cents(col: Column) -> Column:
@@ -2325,7 +2325,7 @@ def robust_scale_by_approx(
     )
 
 
-def _fit_cells(df: DataFrame, cols, max_cells: int = 65536):
+def _fit_cells(df: DataFrame, cols):
     """Collapse identical fit rows to (pattern, ``_w`` count) cells —
     the r10 optimization shared by the whole GLM family (guide §1.2
     step 1: remove passes; §2.3: aggregate before you shuffle).
@@ -2342,10 +2342,10 @@ def _fit_cells(df: DataFrame, cols, max_cells: int = 65536):
     front (the count also materializes the lazy checkpoint, so every
     scoring iteration reads the tiny pinned frame instead of
     re-scanning the cohort). When the cohort does NOT collapse
-    (distinct patterns > ``max_cells`` — e.g. a continuous covariate
-    at production scale), falls back to the raw projection: the only
-    waste is the one probe pass, and iterations behave exactly as
-    before.
+    (more distinct patterns than the one driver-collect cap in
+    driverfit.py — e.g. a continuous covariate at production scale),
+    falls back to the raw projection: the only waste is the one probe
+    pass, and iterations behave exactly as before.
 
     Returns ``(src, w, pdf)`` — the frame to aggregate over, the
     weight column to multiply each rounded-long term by, and (r10
@@ -2361,22 +2361,12 @@ def _fit_cells(df: DataFrame, cols, max_cells: int = 65536):
         .agg(F.count(F.lit(1)).alias("_w"))
         .localCheckpoint(eager=False)
     )
-    pdf = cells.limit(max_cells + 1).toPandas()
-    if len(pdf) > max_cells:
+    pdf = collect_bounded(cells)
+    if pdf is None:
         return proj, F.lit(1).cast("long"), None
-    import numpy as np
-
-    for c in cols:
-        vals = pdf[c]
-        if vals.isnull().any():
-            pdf = None
-            break
-        if vals.dtype.kind == "f" and not np.isfinite(
-            vals.to_numpy()
-        ).all():
-            pdf = None
-            break
-    return cells, F.col("_w"), pdf
+    # screened here, not in the collect: a bounded collapse with
+    # null/non-finite keys still iterates over the pinned cells
+    return cells, F.col("_w"), pdf if cells_clean(pdf, cols) else None
 
 
 def glm_poisson(
@@ -2443,6 +2433,8 @@ def glm_poisson(
     # order, same nano roundings, exact int64 sums) — bit-identical,
     # pinned in tests.
     if pdfc is not None:
+        if len(pdfc) == 0:
+            raise ValueError("glm_poisson: empty input")
         wn = pdfc["_w"].to_numpy().astype(np.int64)
         yn = pdfc[y_col].to_numpy().astype(np.float64)
         offn = (
@@ -2504,6 +2496,8 @@ def glm_poisson(
                     ).alias(f"i{j}_{k}")
                 )
         row = src.agg(*aggs).collect()[0]
+        if row["g0"] is None:  # no rows: every sum is null
+            raise ValueError("glm_poisson: empty input")
         g = np.array([row[f"g{j}"] / 1e9 for j in range(p + 1)])
         info = np.zeros((p + 1, p + 1))
         for j in range(p + 1):
@@ -2559,6 +2553,8 @@ def glm_logistic(
     # r10 driver-solve fast path — the glm_poisson pattern on the
     # IRLS terms (bit-identical numpy twin of the fold below)
     if pdfc is not None:
+        if len(pdfc) == 0:
+            raise ValueError("glm_logistic: empty input")
         wn = pdfc["_w"].to_numpy().astype(np.int64)
         yn = pdfc[y_col].to_numpy().astype(np.float64)
         xn = [1.0] + [
@@ -2616,6 +2612,8 @@ def glm_logistic(
                     ).alias(f"i{j}_{k}")
                 )
         row = src.agg(*aggs).collect()[0]
+        if row["g0"] is None:  # no rows: every sum is null
+            raise ValueError("glm_logistic: empty input")
         g = np.array([row[f"g{j}"] / 1e9 for j in range(p + 1)])
         info = np.zeros((p + 1, p + 1))
         for j in range(p + 1):
@@ -4105,22 +4103,6 @@ def meta_analysis_dl(
     )
 
 
-def _ordmn_collect(cells, p, max_cells: int = MAX_DRIVER_CELLS):
-    """Bounded collect of the (x-pattern, level, count) cell frame
-    shared by ``ordinal_logistic`` / ``multinomial_logistic`` —
-    ``None`` when unbounded or any key is null/non-finite (the
-    distributed when-chains null-skip such cells; the numpy twin
-    would mis-group them)."""
-    pdf = cells.limit(max_cells + 1).toPandas()
-    if len(pdf) > max_cells:
-        return None
-    if not cells_clean(
-        pdf, [f"_x{j}" for j in range(p)], ["_y"]
-    ):
-        return None
-    return pdf
-
-
 def _sorted_levels(pdf):
     """Distinct ``_y`` values with per-level total counts in Spark
     ``orderBy`` order. Python ``sorted`` equals Spark's ordering here:
@@ -4299,7 +4281,10 @@ def ordinal_logistic(
     # bit-identical, pinned in tests/test_driverfit.py. UTF-8 byte
     # order (Spark's string orderBy) equals code-point order, so the
     # driver-sorted levels match the distributed orderBy exactly.
-    _pdfc = _ordmn_collect(cells, p)
+    # Null/non-finite features and null levels fall back: the
+    # distributed when-chains null-skip such cells, the twin would
+    # mis-group them.
+    _pdfc = collect_bounded(cells, [f"_x{j}" for j in range(p)], ["_y"])
     if _pdfc is not None:
         return _ordinal_driver_fit(
             _pdfc, feats, iters, return_se, max_levels
@@ -5054,7 +5039,7 @@ def multinomial_logistic(
     # (x-pattern, level) cells -> levels AND the whole Newton loop run
     # on the driver (numpy twin of the fold below) — bit-identical,
     # pinned in tests/test_driverfit.py.
-    _pdfc = _ordmn_collect(cells, p)
+    _pdfc = collect_bounded(cells, [f"_x{j}" for j in range(p)], ["_y"])
     if _pdfc is not None:
         return _multinomial_driver_fit(
             _pdfc, feats, iters, return_se, max_levels
@@ -6178,19 +6163,17 @@ def quantile_regression(
     # below is a pure function of (x, y), so Σ_rows round = Σ_cells
     # w·round, and percentile(y, τ, w) with the frequency argument
     # accumulates the identical counts map as the per-row form.
-    # MAX_DRIVER_CELLS (not the GLM family's 65536-pattern cap): a
-    # near-continuous y makes (x, y) cells approach the row count, and
-    # the MM twin is a flat per-cell fold — the transfer-size guard is
-    # the right bound here. ``_srcw`` (r11, the glm_poisson pattern)
-    # lets a caller fitting SEVERAL τ over the same cohort collapse
-    # and collect the identical cells once.
+    # The collect is bounded by the one driver cap the whole fit family
+    # shares (driverfit.py): a near-continuous y makes (x, y) cells
+    # approach the row count, and the MM twin is a flat per-cell fold,
+    # so the transfer size is what bounds it. ``_srcw`` (r11, the
+    # glm_poisson pattern) lets a caller fitting SEVERAL τ over the
+    # same cohort collapse and collect the identical cells once.
     if _srcw is not None:
         src, cw, _pdfc = _srcw
     else:
         src, cw, _pdfc = _fit_cells(
-            df,
-            list(dict.fromkeys(feats + [y_col])),
-            max_cells=MAX_DRIVER_CELLS,
+            df, list(dict.fromkeys(feats + [y_col]))
         )
 
     # driver-solve fast path (driverfit.py): bounded collected cells ->

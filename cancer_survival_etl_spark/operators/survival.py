@@ -38,12 +38,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .driverfit import (
-    MAX_DRIVER_CELLS,
-    cells_clean,
-    collect_cells,
-    round_half_up,
-)
+from .driverfit import collect_bounded, collect_cells, round_half_up
 from .windows import global_prefix_sum, grouped_prefix_sum
 
 
@@ -113,15 +108,11 @@ def _km_driver_curve(df, g, duration_col, event_col):
         F.sum(F.lit(1) - ev).alias("n_censored"),
         F.count(F.lit(1)).alias("_cnt"),
     )
-    pdfc = probe.limit(MAX_DRIVER_CELLS + 1).toPandas()
-    if len(pdfc) > MAX_DRIVER_CELLS:
+    pdfc = collect_bounded(
+        probe, [*g, duration_col, "n_event", "n_censored"]
+    )
+    if pdfc is None:
         return None
-    for c in list(g) + [duration_col, "n_event", "n_censored"]:
-        v = pdfc[c]
-        if v.isnull().any():
-            return None
-        if v.dtype.kind == "f" and not np.isfinite(v.to_numpy()).all():
-            return None
     order, expref, gtot = _km_driver_prefixes(pdfc, g, duration_col)
     pdfc = pdfc.iloc[order].reset_index(drop=True)
     d = pdfc["n_event"].to_numpy().astype(np.int64)
@@ -2583,7 +2574,6 @@ def cox_ph(
     ties: str = "breslow",
     strata_cols: Sequence[str] | None = None,
     return_se: bool = False,
-    max_driver_cells: int = MAX_DRIVER_CELLS,
 ):
     """Distributed Cox proportional-hazards regression, Newton-Raphson
     on the partial likelihood. Returns [β_1, ..., β_p].
@@ -2661,36 +2651,33 @@ def cox_ph(
     # (strata, x-pattern, duration, event) cells; when the collapse is
     # bounded the whole Newton loop runs on the driver over the
     # collected cells — zero per-iteration Spark jobs. Bit-identical
-    # to the distributed loop below (pinned in tests).
-    if max_driver_cells > 0:
-        proj = df.select(
-            *[F.col(c).alias(f"_g{i}") for i, c in enumerate(_strata)],
-            *[
-                F.col(c).cast("double").alias(f"_x{j}")
-                for j, c in enumerate(feats)
-            ],
-            F.col(duration_col).cast("double").alias("_t"),
-            F.col(event_col).cast("long").alias("_d"),
-        )
-        pdf = collect_cells(proj, list(proj.columns), max_driver_cells)
-        if pdf is not None and not cells_clean(
-            pdf, [f"_x{j}" for j in range(p)] + ["_t"], ["_d"]
-        ):
-            # null/NaN features, durations or events: the distributed
-            # fold null-skips where the numpy twin would garbage-cast
-            pdf = None
-        if pdf is not None:
-            beta, info = _cox_driver_fit(
-                pdf, p, len(_strata), iters, ties
-            )
-            if return_se:
-                cov = np.linalg.inv(info)
-                se = [
-                    round(float(np.sqrt(cov[j, j])), 9)
-                    for j in range(p)
-                ]
-                return beta, se
-            return beta
+    # to the distributed loop below (pinned in tests). Null/NaN
+    # features, durations or events fall back: the distributed fold
+    # null-skips where the numpy twin would garbage-cast.
+    proj = df.select(
+        *[F.col(c).alias(f"_g{i}") for i, c in enumerate(_strata)],
+        *[
+            F.col(c).cast("double").alias(f"_x{j}")
+            for j, c in enumerate(feats)
+        ],
+        F.col(duration_col).cast("double").alias("_t"),
+        F.col(event_col).cast("long").alias("_d"),
+    )
+    pdf = collect_cells(
+        proj,
+        proj.columns,
+        [f"_x{j}" for j in range(p)] + ["_t"],
+        ["_d"],
+    )
+    if pdf is not None:
+        if len(pdf) == 0:
+            raise ValueError("cox_ph: empty input")
+        beta, info = _cox_driver_fit(pdf, p, len(_strata), iters, ties)
+        if return_se:
+            cov = np.linalg.inv(info)
+            se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(p)]
+            return beta, se
+        return beta
 
     # distributed fallback: pin the NARROW projection once — every
     # Newton iteration re-derives the upstream plan otherwise (guide §5
@@ -2845,6 +2832,8 @@ def cox_ph(
                         ).alias(f"i{j}_{k}")
                     )
             row = pre.agg(*out_aggs).collect()[0]
+        if row["g0"] is None:  # no cells: every sum is null
+            raise ValueError("cox_ph: empty input")
         g = np.array([row[f"g{j}"] / 1e9 for j in range(p)])
         info = np.zeros((p, p))
         for j in range(p):
@@ -3264,18 +3253,15 @@ def cox_ph_robust(
             else []
         ),
     )
-    _pdfc = collect_cells(_proj, list(_proj.columns))
-    if (
-        _pdfc is not None
-        and len(_pdfc) > 0
-        and cells_clean(
-            _pdfc,
-            [f"_x{j}" for j in range(p)] + ["_t"],
-            ["_d"]
-            + [f"_g{i}" for i in range(len(strata))]
-            + (["_cl"] if cluster_col else []),
-        )
-    ):
+    _pdfc = collect_cells(
+        _proj,
+        _proj.columns,
+        [f"_x{j}" for j in range(p)] + ["_t"],
+        ["_d"]
+        + [f"_g{i}" for i in range(len(strata))]
+        + (["_cl"] if cluster_col else []),
+    )
+    if _pdfc is not None and len(_pdfc) > 0:
         se_model, se_robust = _cox_robust_driver(
             _pdfc, p, len(strata), beta, cluster_col is not None
         )
@@ -3511,12 +3497,21 @@ def _fg_censoring_base(
             ["_g_term"],
             ["_lng_before"],
         ).select(
-            *strata, duration_col,
+            *[F.col(k).alias(f"_cg_{i}") for i, k in enumerate(strata)],
+            F.col(duration_col).alias("_cg_t"),
             F.col("_lng_before").alias("_lng_left"),
         )
-        return df.join(
-            F.broadcast(gtab), list(strata) + [duration_col], "left"
-        ).fillna({"_lng_left": 0})
+        # null-safe join: a NULL stratum is a real stratum to groupBy
+        # and grouped_prefix_sum (and to the driver twin), so its
+        # subjects must keep their own lnG(t-)
+        cond = F.col(duration_col) == F.col("_cg_t")
+        for i, k in enumerate(strata):
+            cond = cond & F.col(k).eqNullSafe(F.col(f"_cg_{i}"))
+        return (
+            df.join(F.broadcast(gtab), cond, "left")
+            .drop(*[f"_cg_{i}" for i in range(len(strata))], "_cg_t")
+            .fillna({"_lng_left": 0})
+        )
     gtab = global_prefix_sum(
         gcells.select(duration_col, "_g_term"),
         duration_col,
@@ -3529,47 +3524,6 @@ def _fg_censoring_base(
     return df.join(F.broadcast(gtab), duration_col, "left").fillna(
         {"_lng_left": 0}
     )
-
-
-def _fg_driver_collect(
-    df,
-    feats,
-    duration_col,
-    cause_col,
-    strata,
-    cluster_col=None,
-    max_cells: int = MAX_DRIVER_CELLS,
-):
-    """Bounded collect of (strata..., x-pattern, duration, cause
-    [, cluster]) cells for the Fine-Gray driver twins — ``None`` when
-    unbounded or any numeric key is null/non-finite."""
-    import numpy as np
-
-    proj = df.select(
-        *[F.col(c).alias(f"_g{i}") for i, c in enumerate(strata)],
-        *[
-            F.col(c).cast("double").alias(f"_x{j}")
-            for j, c in enumerate(feats)
-        ],
-        F.col(duration_col).cast("double").alias("_t"),
-        F.col(cause_col).cast("long").alias("_cs"),
-        *([F.col(cluster_col).alias("_cl")] if cluster_col else []),
-    )
-    cells = proj.groupBy(*proj.columns).agg(
-        F.count(F.lit(1)).alias("_w")
-    )
-    pdf = cells.limit(max_cells + 1).toPandas()
-    if len(pdf) > max_cells:
-        return None
-    for c in [f"_x{j}" for j in range(len(feats))] + ["_t"]:
-        v = pdf[c]
-        if v.isnull().any() or not np.isfinite(
-            v.to_numpy(dtype=np.float64)
-        ).all():
-            return None
-    if pdf["_cs"].isnull().any():
-        return None
-    return pdf
 
 
 def _fg_driver_arrays(cells, p, n_strat):
@@ -4024,11 +3978,26 @@ def fine_gray(
     # r10 driver-solve fast path (driverfit.py): bounded (strata,
     # x-pattern, duration, cause) cells — censoring-KM lnG twin + the
     # whole Newton loop on the driver; bit-identical to the
-    # distributed fold below (pinned in tests).
-    _pdfc = _fg_driver_collect(
-        df, feats, duration_col, cause_col, strata
+    # distributed fold below (pinned in tests). Null/non-finite
+    # features or durations and null causes fall back.
+    _proj = df.select(
+        *[F.col(c).alias(f"_g{i}") for i, c in enumerate(strata)],
+        *[
+            F.col(c).cast("double").alias(f"_x{j}")
+            for j, c in enumerate(feats)
+        ],
+        F.col(duration_col).cast("double").alias("_t"),
+        F.col(cause_col).cast("long").alias("_cs"),
+    )
+    _pdfc = collect_cells(
+        _proj,
+        _proj.columns,
+        [f"_x{j}" for j in range(p)] + ["_t"],
+        ["_cs"],
     )
     if _pdfc is not None:
+        if len(_pdfc) == 0:
+            raise ValueError("fine_gray: empty input")
         beta, info = _fg_driver_fit(_pdfc, p, len(strata), iters)
         if return_se:
             cov = np.linalg.inv(info)
@@ -4177,6 +4146,8 @@ def fine_gray(
                     ).alias(f"i{j}_{k}")
                 )
         row = pre.agg(*out_aggs).collect()[0]
+        if row["g0"] is None:  # no cells: every sum is null
+            raise ValueError("fine_gray: empty input")
         g = np.array([row[f"g{j}"] / 1e9 for j in range(p)])
         info = np.zeros((p, p))
         for j in range(p):
@@ -4248,9 +4219,21 @@ def fine_gray_robust(
     # r10 driver-solve fast path (driverfit.py): ONE bounded cell
     # collect powers the fit, the at-β̂ information, the score curves
     # and the clustered meat fold — bit-identical to the distributed
-    # passes below (pinned in tests).
-    _pdfc = _fg_driver_collect(
-        df, feats, duration_col, cause_col, [], cluster_col=cluster_col
+    # passes below (pinned in tests). Screened as in fine_gray.
+    _proj = df.select(
+        *[
+            F.col(c).cast("double").alias(f"_x{j}")
+            for j, c in enumerate(feats)
+        ],
+        F.col(duration_col).cast("double").alias("_t"),
+        F.col(cause_col).cast("long").alias("_cs"),
+        *([F.col(cluster_col).alias("_cl")] if cluster_col else []),
+    )
+    _pdfc = collect_cells(
+        _proj,
+        _proj.columns,
+        [f"_x{j}" for j in range(p)] + ["_t"],
+        ["_cs"],
     )
     if _pdfc is not None:
         return _fg_robust_driver(
@@ -5041,7 +5024,6 @@ def _gray_collect(
     duration_col,
     cause_col,
     strata,
-    max_cells: int = MAX_DRIVER_CELLS,
 ):
     """Bounded collect of (strata..., duration, group, cause) count
     cells for the Gray-test driver twins. Returns (pdf, gvals) or
@@ -5051,26 +5033,15 @@ def _gray_collect(
     per-duration longs the distributed groupBy produces (d1, d, cen,
     m1, m, rm1, rm) are pure integer counts of these cells, so
     deriving them on the driver is exact."""
-    import numpy as np
-
     proj = df.select(
         *[F.col(c).alias(f"_g{i}") for i, c in enumerate(strata)],
         F.col(duration_col).alias("_t"),
         F.col(group_col).alias("_grp"),
         F.col(cause_col).cast("long").alias("_cs"),
     )
-    cells = proj.groupBy(*proj.columns).agg(
-        F.count(F.lit(1)).alias("_w")
-    )
-    pdf = cells.limit(max_cells + 1).toPandas()
-    if len(pdf) > max_cells:
+    pdf = collect_cells(proj, proj.columns, ["_t", "_grp", "_cs"])
+    if pdf is None:
         return None, None
-    for c in ["_t", "_grp", "_cs"]:
-        v = pdf[c]
-        if v.isnull().any():
-            return None, None
-        if v.dtype.kind == "f" and not np.isfinite(v.to_numpy()).all():
-            return None, None
     # Spark orderBy == Python sorted here: numerics trivially, strings
     # because UTF-8 byte order preserves code-point order
     gvals = sorted(set(pdf["_grp"].tolist()))
@@ -5856,12 +5827,13 @@ def cox_ph_time_dependent(
         F.col(stop_col).cast("double").alias("_sp"),
         F.col(event_col).cast("long").alias("_d"),
     )
-    _pdfc = collect_cells(_proj, list(_proj.columns))
-    if _pdfc is not None and cells_clean(
-        _pdfc,
+    _pdfc = collect_cells(
+        _proj,
+        _proj.columns,
         [f"_x{j}" for j in range(p)] + ["_st", "_sp"],
         ["_d"],
-    ):
+    )
+    if _pdfc is not None:
         return _cox_td_driver_fit(_pdfc, p, iters, ties, return_se)
 
     # the guard lives inside _tm so Catalyst's column pruning can
@@ -6740,227 +6712,216 @@ def turnbull_km(
     # NaN group keys fall back: Spark's join/groupBy null-key
     # semantics differ from positional numpy indexing.
     m = None
-    if MAX_DRIVER_CELLS > 0:
+    _mp = collect_bounded(memb, notnull_cols=[*g, "_L", "_Rk", "_w", "_q"])
+    if _mp is not None and len(_mp) > 0:
         import numpy as np
 
-        _mp = memb.limit(MAX_DRIVER_CELLS + 1).toPandas()
-        _ok = 0 < len(_mp) <= MAX_DRIVER_CELLS
-        if _ok:
-            for _c in [*g, "_L", "_Rk", "_w", "_q"]:
-                v = _mp[_c]
-                if v.isnull().any() or (
-                    v.dtype.kind == "f"
-                    and np.isnan(v.to_numpy(dtype=np.float64)).any()
-                ):
-                    _ok = False
-                    break
-        if _ok:
-            cell_idx = (
-                _mp.groupby([*g, "_L", "_Rk"], sort=False).ngroup().to_numpy()
-            )
-            sup_key = _mp.groupby([*g, "_q"], sort=False)
-            sup_idx = sup_key.ngroup().to_numpy()
-            n_cell = int(cell_idx.max()) + 1
-            n_sup = int(sup_idx.max()) + 1
-            wv = _mp["_w"].to_numpy().astype(np.int64)
-            mv = np.full(n_sup, 1000000, dtype=np.int64)
-            for _ in range(iters):
-                den = np.zeros(n_cell, dtype=np.int64)
-                np.add.at(den, cell_idx, mv[sup_idx])
-                with np.errstate(over="ignore"):
-                    wm = wv * mv[sup_idx]
-                val = round_half_up(
-                    wm.astype(np.float64)
-                    / den[cell_idx].astype(np.float64)
-                    * 1e6
-                ).astype(np.int64)
-                new_m = np.zeros(n_sup, dtype=np.int64)
-                np.add.at(new_m, sup_idx, val)
-                mv = new_m
-            # r11 full curve twin: with the masses in hand, the final
-            # E-step, the censored-cell lattice, both grouped prefix
-            # passes and every at-risk/log-term long are the SAME
-            # exact-lattice arithmetic over the already-collected memb
-            # rows — run them here and hand the float tail back to
-            # Spark as the identical expressions over identical longs
-            # (the _km_driver_curve pattern), skipping the ~8
-            # fixed-latency jobs of the distributed tail. Bit-equal
-            # rows pinned in tests/test_driverfit.py.
+        cell_idx = (
+            _mp.groupby([*g, "_L", "_Rk"], sort=False).ngroup().to_numpy()
+        )
+        sup_key = _mp.groupby([*g, "_q"], sort=False)
+        sup_idx = sup_key.ngroup().to_numpy()
+        n_cell = int(cell_idx.max()) + 1
+        n_sup = int(sup_idx.max()) + 1
+        wv = _mp["_w"].to_numpy().astype(np.int64)
+        mv = np.full(n_sup, 1000000, dtype=np.int64)
+        for _ in range(iters):
             den = np.zeros(n_cell, dtype=np.int64)
             np.add.at(den, cell_idx, mv[sup_idx])
             with np.errstate(over="ignore"):
                 wm = wv * mv[sup_idx]
-            alpha = round_half_up(
+            val = round_half_up(
                 wm.astype(np.float64)
                 / den[cell_idx].astype(np.float64)
                 * 1e6
             ).astype(np.int64)
-            rk = _mp["_Rk"].to_numpy(dtype=np.float64)
-            dsup = np.zeros(n_sup, dtype=np.int64)
-            fin = rk != np.inf
-            np.add.at(dsup, sup_idx[fin], alpha[fin])
-            # support metadata: first memb row of each support (the
-            # ngroup(sort=False) / drop_duplicates order identity)
-            sup_first = (
-                _mp.reset_index()
-                .groupby([*g, "_q"], sort=False)["index"]
-                .first()
-                .to_numpy()
-            )
-            sup_pk = _mp["_pk"].to_numpy(dtype=np.float64)[sup_first]
-            sup_q = _mp["_q"].to_numpy(dtype=np.float64)[sup_first]
-            # group codes shared between support and censored rows
-            if g:
-                gcode_all = _mp.groupby(list(g), sort=False).ngroup()
-                sgrp = gcode_all.to_numpy()[sup_first]
-            else:
-                sgrp = np.zeros(n_sup, dtype=np.int64)
-            # per-group total mass (all supports, incl. the ∞ tail)
-            n_grp = int(sgrp.max()) + 1 if n_sup else 0
-            mtot = np.zeros(n_grp, dtype=np.int64)
-            np.add.at(mtot, sgrp, mv)
-            # censored cells: one row per distinct cell with _Rk = ∞
-            cell_first = (
-                _mp.reset_index()
-                .groupby([*g, "_L", "_Rk"], sort=False)["index"]
-                .first()
-                .to_numpy()
-            )
-            c_rk = rk[cell_first]
-            cen_mask = c_rk == np.inf
-            cen_rows = cell_first[cen_mask]
-            cen_t = _mp["_L"].to_numpy(dtype=np.float64)[cen_rows]
-            cen_w = wv[cen_rows]
-            cen_g = (
-                gcode_all.to_numpy()[cen_rows]
-                if g
-                else np.zeros(len(cen_rows), dtype=np.int64)
-            )
-            # curve lattice = finite supports + censored cells,
-            # ordered per group by (t, support-before-censor)
-            fs = np.flatnonzero(sup_pk != np.inf)
-            lat_g = np.concatenate([sgrp[fs], cen_g])
-            lat_t = np.concatenate([sup_pk[fs], cen_t])
-            lat_sup = np.concatenate(
-                [
-                    np.ones(len(fs), dtype=np.int64),
-                    np.zeros(len(cen_rows), dtype=np.int64),
-                ]
-            )
-            lat_d = np.concatenate(
-                [dsup[fs], np.zeros(len(cen_rows), dtype=np.int64)]
-            )
-            lat_cen = np.concatenate(
-                [np.zeros(len(fs), dtype=np.int64), cen_w]
-            )
-            lat_sidx = np.concatenate(
-                [fs, np.full(len(cen_rows), -1, dtype=np.int64)]
-            )
-            order = np.lexsort((1 - lat_sup, lat_t, lat_g))
-            lat_g, lat_t, lat_sup, lat_d, lat_cen, lat_sidx = (
-                a[order]
-                for a in (
-                    lat_g, lat_t, lat_sup, lat_d, lat_cen, lat_sidx
-                )
-            )
-            newg = np.ones(len(lat_g), dtype=bool)
-            if len(lat_g) > 1:
-                newg[1:] = lat_g[1:] != lat_g[:-1]
-            gstarts = np.flatnonzero(newg)
-            glen = np.diff(np.append(gstarts, len(lat_g)))
-
-            def expref(v):
-                pre = np.cumsum(v)
-                pre = np.concatenate(([np.int64(0)], pre[:-1]))
-                return pre - np.repeat(pre[gstarts], glen)
-
-            def gtot(v):
-                return np.repeat(np.add.reduceat(v, gstarts), glen)
-
-            db = expref(lat_d)
-            cenb = expref(lat_cen)
-            ysn = gtot(lat_d) - db
-            yc = gtot(lat_cen) - cenb
-            d_dbl = lat_d / 1e6
-            y_dbl = ysn / 1e6 + yc
-            with np.errstate(divide="ignore", invalid="ignore"):
-                lt = np.where(
-                    (d_dbl > 0) & (d_dbl < y_dbl),
-                    round_half_up(
-                        np.log(
-                            1.0
-                            - np.where(
-                                (d_dbl > 0) & (d_dbl < y_dbl),
-                                d_dbl,
-                                0.0,
-                            )
-                            / np.where(y_dbl > 0, y_dbl, 1.0)
-                        )
-                        * 1e6
-                    ).astype(np.int64),
-                    np.int64(0),
-                )
-            dall = (
-                (d_dbl > 0) & (d_dbl == y_dbl)
-            ).astype(np.int64)
-            lt_in = expref(lt) + lt
-            dall_in = expref(dall) + dall
-
-            keep = lat_sup == 1
-            sidx = lat_sidx[keep]
-            from pyspark.sql.types import (
-                DoubleType,
-                LongType,
-                StructField,
-                StructType,
-            )
-
-            hdr = _mp.iloc[sup_first[sidx]][list(g)].reset_index(
-                drop=True
-            )
-            hdr["_q"] = sup_q[sidx]
-            hdr["_t"] = sup_pk[sidx]
-            hdr["_m"] = mv[sidx]
-            hdr["_mtot"] = mtot[lat_g[keep]]
-            hdr["_d"] = lat_d[keep]
-            hdr["_ysn"] = ysn[keep]
-            hdr["_yc"] = yc[keep]
-            hdr["_lt"] = lt_in[keep]
-            hdr["_dall"] = dall_in[keep]
-            gfields = [
-                f for f in memb.schema.fields if f.name in list(g)
+            new_m = np.zeros(n_sup, dtype=np.int64)
+            np.add.at(new_m, sup_idx, val)
+            mv = new_m
+        # r11 full curve twin: with the masses in hand, the final
+        # E-step, the censored-cell lattice, both grouped prefix
+        # passes and every at-risk/log-term long are the SAME
+        # exact-lattice arithmetic over the already-collected memb
+        # rows — run them here and hand the float tail back to
+        # Spark as the identical expressions over identical longs
+        # (the _km_driver_curve pattern), skipping the ~8
+        # fixed-latency jobs of the distributed tail. Bit-equal
+        # rows pinned in tests/test_driverfit.py.
+        den = np.zeros(n_cell, dtype=np.int64)
+        np.add.at(den, cell_idx, mv[sup_idx])
+        with np.errstate(over="ignore"):
+            wm = wv * mv[sup_idx]
+        alpha = round_half_up(
+            wm.astype(np.float64)
+            / den[cell_idx].astype(np.float64)
+            * 1e6
+        ).astype(np.int64)
+        rk = _mp["_Rk"].to_numpy(dtype=np.float64)
+        dsup = np.zeros(n_sup, dtype=np.int64)
+        fin = rk != np.inf
+        np.add.at(dsup, sup_idx[fin], alpha[fin])
+        # support metadata: first memb row of each support (the
+        # ngroup(sort=False) / drop_duplicates order identity)
+        sup_first = (
+            _mp.reset_index()
+            .groupby([*g, "_q"], sort=False)["index"]
+            .first()
+            .to_numpy()
+        )
+        sup_pk = _mp["_pk"].to_numpy(dtype=np.float64)[sup_first]
+        sup_q = _mp["_q"].to_numpy(dtype=np.float64)[sup_first]
+        # group codes shared between support and censored rows
+        if g:
+            gcode_all = _mp.groupby(list(g), sort=False).ngroup()
+            sgrp = gcode_all.to_numpy()[sup_first]
+        else:
+            sgrp = np.zeros(n_sup, dtype=np.int64)
+        # per-group total mass (all supports, incl. the ∞ tail)
+        n_grp = int(sgrp.max()) + 1 if n_sup else 0
+        mtot = np.zeros(n_grp, dtype=np.int64)
+        np.add.at(mtot, sgrp, mv)
+        # censored cells: one row per distinct cell with _Rk = ∞
+        cell_first = (
+            _mp.reset_index()
+            .groupby([*g, "_L", "_Rk"], sort=False)["index"]
+            .first()
+            .to_numpy()
+        )
+        c_rk = rk[cell_first]
+        cen_mask = c_rk == np.inf
+        cen_rows = cell_first[cen_mask]
+        cen_t = _mp["_L"].to_numpy(dtype=np.float64)[cen_rows]
+        cen_w = wv[cen_rows]
+        cen_g = (
+            gcode_all.to_numpy()[cen_rows]
+            if g
+            else np.zeros(len(cen_rows), dtype=np.int64)
+        )
+        # curve lattice = finite supports + censored cells,
+        # ordered per group by (t, support-before-censor)
+        fs = np.flatnonzero(sup_pk != np.inf)
+        lat_g = np.concatenate([sgrp[fs], cen_g])
+        lat_t = np.concatenate([sup_pk[fs], cen_t])
+        lat_sup = np.concatenate(
+            [
+                np.ones(len(fs), dtype=np.int64),
+                np.zeros(len(cen_rows), dtype=np.int64),
             ]
-            schema = StructType(
-                gfields
-                + [
-                    StructField("_q", DoubleType()),
-                    StructField("_t", DoubleType()),
-                ]
-                + [
-                    StructField(c, LongType())
-                    for c in (
-                        "_m", "_mtot", "_d", "_ysn", "_yc", "_lt",
-                        "_dall",
+        )
+        lat_d = np.concatenate(
+            [dsup[fs], np.zeros(len(cen_rows), dtype=np.int64)]
+        )
+        lat_cen = np.concatenate(
+            [np.zeros(len(fs), dtype=np.int64), cen_w]
+        )
+        lat_sidx = np.concatenate(
+            [fs, np.full(len(cen_rows), -1, dtype=np.int64)]
+        )
+        order = np.lexsort((1 - lat_sup, lat_t, lat_g))
+        lat_g, lat_t, lat_sup, lat_d, lat_cen, lat_sidx = (
+            a[order]
+            for a in (
+                lat_g, lat_t, lat_sup, lat_d, lat_cen, lat_sidx
+            )
+        )
+        newg = np.ones(len(lat_g), dtype=bool)
+        if len(lat_g) > 1:
+            newg[1:] = lat_g[1:] != lat_g[:-1]
+        gstarts = np.flatnonzero(newg)
+        glen = np.diff(np.append(gstarts, len(lat_g)))
+
+        def expref(v):
+            pre = np.cumsum(v)
+            pre = np.concatenate(([np.int64(0)], pre[:-1]))
+            return pre - np.repeat(pre[gstarts], glen)
+
+        def gtot(v):
+            return np.repeat(np.add.reduceat(v, gstarts), glen)
+
+        db = expref(lat_d)
+        cenb = expref(lat_cen)
+        ysn = gtot(lat_d) - db
+        yc = gtot(lat_cen) - cenb
+        d_dbl = lat_d / 1e6
+        y_dbl = ysn / 1e6 + yc
+        with np.errstate(divide="ignore", invalid="ignore"):
+            lt = np.where(
+                (d_dbl > 0) & (d_dbl < y_dbl),
+                round_half_up(
+                    np.log(
+                        1.0
+                        - np.where(
+                            (d_dbl > 0) & (d_dbl < y_dbl),
+                            d_dbl,
+                            0.0,
+                        )
+                        / np.where(y_dbl > 0, y_dbl, 1.0)
                     )
-                ]
+                    * 1e6
+                ).astype(np.int64),
+                np.int64(0),
             )
-            hframe = df.sparkSession.createDataFrame(hdr, schema)
-            micro6 = F.lit(1000000.0)
-            return hframe.select(
-                *g,
-                F.col("_q").alias("q_lo"),
-                F.col("_t").alias("time"),
-                F.round(F.col("_m") / F.col("_mtot"), 6).alias("mass"),
-                F.round(F.col("_d") / micro6, 6).alias("n_event_exp"),
-                F.round(
-                    F.col("_ysn") / micro6 + F.col("_yc"), 6
-                ).alias("n_risk_exp"),
-                F.when(F.col("_dall") > 0, F.lit(0.0))
-                .otherwise(
-                    F.round(F.exp(F.col("_lt") / micro6), 6)
+        dall = (
+            (d_dbl > 0) & (d_dbl == y_dbl)
+        ).astype(np.int64)
+        lt_in = expref(lt) + lt
+        dall_in = expref(dall) + dall
+
+        keep = lat_sup == 1
+        sidx = lat_sidx[keep]
+        from pyspark.sql.types import (
+            DoubleType,
+            LongType,
+            StructField,
+            StructType,
+        )
+
+        hdr = _mp.iloc[sup_first[sidx]][list(g)].reset_index(
+            drop=True
+        )
+        hdr["_q"] = sup_q[sidx]
+        hdr["_t"] = sup_pk[sidx]
+        hdr["_m"] = mv[sidx]
+        hdr["_mtot"] = mtot[lat_g[keep]]
+        hdr["_d"] = lat_d[keep]
+        hdr["_ysn"] = ysn[keep]
+        hdr["_yc"] = yc[keep]
+        hdr["_lt"] = lt_in[keep]
+        hdr["_dall"] = dall_in[keep]
+        gfields = [
+            f for f in memb.schema.fields if f.name in list(g)
+        ]
+        schema = StructType(
+            gfields
+            + [
+                StructField("_q", DoubleType()),
+                StructField("_t", DoubleType()),
+            ]
+            + [
+                StructField(c, LongType())
+                for c in (
+                    "_m", "_mtot", "_d", "_ysn", "_yc", "_lt",
+                    "_dall",
                 )
-                .alias("survival"),
+            ]
+        )
+        hframe = df.sparkSession.createDataFrame(hdr, schema)
+        micro6 = F.lit(1000000.0)
+        return hframe.select(
+            *g,
+            F.col("_q").alias("q_lo"),
+            F.col("_t").alias("time"),
+            F.round(F.col("_m") / F.col("_mtot"), 6).alias("mass"),
+            F.round(F.col("_d") / micro6, 6).alias("n_event_exp"),
+            F.round(
+                F.col("_ysn") / micro6 + F.col("_yc"), 6
+            ).alias("n_risk_exp"),
+            F.when(F.col("_dall") > 0, F.lit(0.0))
+            .otherwise(
+                F.round(F.exp(F.col("_lt") / micro6), 6)
             )
+            .alias("survival"),
+        )
     if m is None:
         # EM on unnormalized micro-lattice masses, init 1.0 per
         # support. Each iteration adds a fixed 3-op layer over the
@@ -7721,17 +7682,11 @@ def _km_weighted_driver_curve(
         F.sum(ev).alias("n_event"),
         F.sum(F.lit(1) - ev).alias("n_censored"),
     )
-    pdfc = probe.limit(MAX_DRIVER_CELLS + 1).toPandas()
-    if len(pdfc) > MAX_DRIVER_CELLS:
+    pdfc = collect_bounded(
+        probe, [*g, duration_col, "_dw", "_rw", "n_event", "n_censored"]
+    )
+    if pdfc is None:
         return None
-    for c in list(g) + [
-        duration_col, "_dw", "_rw", "n_event", "n_censored"
-    ]:
-        v = pdfc[c]
-        if v.isnull().any():
-            return None
-        if v.dtype.kind == "f" and not np.isfinite(v.to_numpy()).all():
-            return None
     order, expref, gtot = _km_driver_prefixes(pdfc, g, duration_col)
     pdfc = pdfc.iloc[order].reset_index(drop=True)
     dwl = pdfc["_dw"].to_numpy().astype(np.int64)
@@ -7969,21 +7924,14 @@ def _aipw_driver_contrast(
     same float op order as the distributed fold; the final doubles
     (divisions, 6-dp rounds) are handed back to Spark as the
     IDENTICAL expressions over the exact longs, so the returned rows
-    are bit-identical (pinned in tests/test_driverfit.py). Returns
-    ``None`` (caller falls back to the distributed pipeline) on
-    null/NaN keys or when a pattern violates positivity — the
-    distributed path carries the in-plan raise."""
+    are bit-identical (pinned in tests/test_driverfit.py). ``pdfc``
+    is screened for null/non-finite keys by the caller's bounded
+    collect. Returns ``None`` (caller falls back to the distributed
+    pipeline) when a pattern violates positivity — the distributed
+    path carries the in-plan raise."""
     import numpy as np
 
     allfeats = feats + [c for c in pfeats if c not in feats]
-    for c in ["_a", "_dur", "_n", "_nev"] + allfeats:
-        v = pdfc[c]
-        if v.isnull().any():
-            return None
-        if v.dtype.kind == "f" and not np.isfinite(
-            v.to_numpy()
-        ).all():
-            return None
     apat = pdfc.groupby(allfeats, sort=False).ngroup().to_numpy()
     npat_all = int(apat.max()) + 1 if len(apat) else 0
     # outcome model m̂ and the positivity check group by the OUTCOME
@@ -8296,8 +8244,8 @@ def aipw_survival_contrast(
     # curves and the AIPW combine all run on the driver — bit-identical
     # (pinned in tests/test_driverfit.py); unbounded/null cohorts and
     # positivity violations use the distributed pipeline below.
-    _pdfc = cells.limit(MAX_DRIVER_CELLS + 1).toPandas()
-    if len(_pdfc) <= MAX_DRIVER_CELLS:
+    _pdfc = collect_bounded(cells, ["_a", "_dur", "_n", "_nev", *allfeats])
+    if _pdfc is not None:
         _res = _aipw_driver_contrast(
             df,
             _pdfc,
@@ -10719,17 +10667,12 @@ def shared_gamma_frailty(
 
     import numpy as np
 
-    _pdfc = cells.limit(MAX_DRIVER_CELLS + 1).toPandas()
-    if (
-        len(_pdfc) <= MAX_DRIVER_CELLS
-        and not _pdfc["_t"].isnull().any()
-        # null clusters: the distributed EM's inner joins on _cl drop
-        # those cells and countDistinct excludes null, while pandas
-        # ngroup(dropna=False) would keep a null-cluster group; null
-        # _d would NaN-cast to int64 garbage in the twin
-        and not _pdfc["_cl"].isnull().any()
-        and not _pdfc["_d"].isnull().any()
-    ):
+    # null clusters fall back: the distributed EM's inner joins on _cl
+    # drop those cells and countDistinct excludes null, while pandas
+    # ngroup(dropna=False) would keep a null-cluster group; null _d
+    # would NaN-cast to int64 garbage in the twin
+    _pdfc = collect_bounded(cells, notnull_cols=["_t", "_cl", "_d"])
+    if _pdfc is not None:
         tn = _pdfc["_t"].to_numpy().astype(np.int64)
         dn = _pdfc["_d"].to_numpy().astype(np.int64)
         nn = _pdfc["_n"].to_numpy().astype(np.int64)
@@ -11180,26 +11123,6 @@ def population_attributable_fraction(
     )
 
 
-def _aft_collect(cells, p, max_cells: int = MAX_DRIVER_CELLS):
-    """Bounded collect of an AFT (x-pattern, ln t, event, _n) cell
-    frame for the driver-solve fast path — ``None`` (fall back to the
-    distributed loop) when the collapse exceeds ``max_cells`` or any
-    key is null/non-finite (whose lattice semantics the numpy twin
-    does not reproduce)."""
-    import numpy as np
-
-    pdf = cells.limit(max_cells + 1).toPandas()
-    if len(pdf) > max_cells:
-        return None
-    for c in [f"_x{j}" for j in range(p)] + ["_y"]:
-        v = pdf[c]
-        if v.isnull().any() or not np.isfinite(
-            v.to_numpy(dtype=np.float64)
-        ).all():
-            return None
-    return pdf
-
-
 def _aft_driver_fit(cells, p, iters, terms):
     """Shared driver-side Newton loop for the AFT family over
     collected cells — numpy twin transliterated term-for-term from
@@ -11315,9 +11238,15 @@ def weibull_aft(
 
     # r10 driver-solve fast path (driverfit.py): bounded cells — the
     # whole Newton loop runs on the driver; numpy twin of the fold
-    # below, bit-identical (pinned in tests).
-    _pdfc = _aft_collect(cells, p)
+    # below, bit-identical (pinned in tests). Null/non-finite features
+    # or ln t and null events fall back: the twin does not reproduce
+    # their lattice semantics (a null event NaN-casts to int64 garbage).
+    _pdfc = collect_bounded(
+        cells, [f"_x{j}" for j in range(p)] + ["_y"], ["_d"]
+    )
     if _pdfc is not None:
+        if len(_pdfc) == 0:
+            raise ValueError("weibull_aft: empty input")
 
         def _terms(z, dlt, xs, sigma, tsum, q):
             wv = np.exp(np.minimum(z, 15.0))
@@ -11352,6 +11281,8 @@ def weibull_aft(
         ),
         F.sum("_n").alias("_nn"),
     ).collect()[0]
+    if r0["_nn"] is None:  # no cells
+        raise ValueError("weibull_aft: empty input")
     theta = [round(r0["_sy"] / 1e9 / r0["_nn"], 9)] + [0.0] * p + [0.0]
 
     info = None
@@ -11714,7 +11645,9 @@ def loglogistic_aft(
 
     # r10 driver-solve fast path (driverfit.py; the weibull_aft
     # pattern): bit-identical numpy twin of the fold below.
-    _pdfc = _aft_collect(cells, p)
+    _pdfc = collect_bounded(
+        cells, [f"_x{j}" for j in range(p)] + ["_y"], ["_d"]
+    )
     if _pdfc is not None:
 
         def _terms(z, dlt, xs, sigma, tsum, q):
@@ -11994,118 +11927,117 @@ def cox_ph_counting(
         sp.alias("_sp"),
         F.col(event_col).cast("long").alias("_d"),
     )
-    _pdfc = collect_cells(_proj, list(_proj.columns))
+    # _d screened too: a null event would NaN-cast to int64 garbage in
+    # the twin where the distributed long sums null-skip
+    _pdfc = collect_cells(
+        _proj,
+        _proj.columns,
+        [f"_x{j}" for j in range(p)] + ["_st", "_sp"],
+        ["_d"],
+    )
     if _pdfc is not None:
-        # _d included: a null event would NaN-cast to int64 garbage in
-        # the twin where the distributed long sums null-skip
-        _ok = cells_clean(
-            _pdfc,
-            [f"_x{j}" for j in range(p)] + ["_st", "_sp"],
-            ["_d"],
-        )
-        if _ok:
-            if (
-                _pdfc["_sp"].to_numpy() <= _pdfc["_st"].to_numpy()
-            ).any():
-                raise ValueError(
-                    "cox_ph_counting: episodes need start < stop"
-                )
-            wv = _pdfc["_w"].to_numpy().astype(np.int64)
-            dv = _pdfc["_d"].to_numpy().astype(np.int64)
-            stv = _pdfc["_st"].to_numpy().astype(np.float64)
-            spv = _pdfc["_sp"].to_numpy().astype(np.float64)
-            xv = [
-                _pdfc[f"_x{j}"].to_numpy().astype(np.float64)
-                for j in range(p)
-            ]
-            tax = np.unique(np.concatenate([stv, spv]))
-            si = np.searchsorted(tax, stv)
-            xi = np.searchsorted(tax, spv)
-            nt = len(tax)
+        if (
+            _pdfc["_sp"].to_numpy() <= _pdfc["_st"].to_numpy()
+        ).any():
+            raise ValueError(
+                "cox_ph_counting: episodes need start < stop"
+            )
+        wv = _pdfc["_w"].to_numpy().astype(np.int64)
+        dv = _pdfc["_d"].to_numpy().astype(np.int64)
+        stv = _pdfc["_st"].to_numpy().astype(np.float64)
+        spv = _pdfc["_sp"].to_numpy().astype(np.float64)
+        xv = [
+            _pdfc[f"_x{j}"].to_numpy().astype(np.float64)
+            for j in range(p)
+        ]
+        tax = np.unique(np.concatenate([stv, spv]))
+        si = np.searchsorted(tax, stv)
+        xi = np.searchsorted(tax, spv)
+        nt = len(tax)
 
-            def scatter(idx, vals):
-                a = np.zeros(nt, dtype=np.int64)
-                np.add.at(a, idx, vals)
-                return a
+        def scatter(idx, vals):
+            a = np.zeros(nt, dtype=np.int64)
+            np.add.at(a, idx, vals)
+            return a
 
-            def excl(a):
-                pr = np.cumsum(a)
-                return np.concatenate(([np.int64(0)], pr[:-1]))
+        def excl(a):
+            pr = np.cumsum(a)
+            return np.concatenate(([np.int64(0)], pr[:-1]))
 
-            d_t = scatter(xi, wv * dv)
-            evm = d_t > 0
-            dtf = d_t.astype(np.float64)
-            s_t = [
-                scatter(
-                    xi,
-                    wv * dv * round_half_up(xv[j] * 1e9).astype(np.int64),
+        d_t = scatter(xi, wv * dv)
+        evm = d_t > 0
+        dtf = d_t.astype(np.float64)
+        s_t = [
+            scatter(
+                xi,
+                wv * dv * round_half_up(xv[j] * 1e9).astype(np.int64),
+            ).astype(np.float64)
+            for j in range(p)
+        ]
+        info = None
+        for _ in range(iters):
+            xb = np.zeros(len(wv))
+            for j in range(p):
+                xb = xb + beta[j] * xv[j]
+            r = np.exp(xb)
+
+            def mom(vcell):
+                # vcell: per-cell rounded lattice value × count —
+                # the product order inside matches the fold below
+                v = vcell * wv
+                return (
+                    excl(scatter(si, v)) - excl(scatter(xi, v))
                 ).astype(np.float64)
+
+            s0 = mom(round_half_up(r * 1e9).astype(np.int64))
+            s1 = [
+                mom(round_half_up(r * xv[j] * 1e9).astype(np.int64))
                 for j in range(p)
             ]
-            info = None
-            for _ in range(iters):
-                xb = np.zeros(len(wv))
-                for j in range(p):
-                    xb = xb + beta[j] * xv[j]
-                r = np.exp(xb)
-
-                def mom(vcell):
-                    # vcell: per-cell rounded lattice value × count —
-                    # the product order inside matches the fold below
-                    v = vcell * wv
-                    return (
-                        excl(scatter(si, v)) - excl(scatter(xi, v))
-                    ).astype(np.float64)
-
-                s0 = mom(round_half_up(r * 1e9).astype(np.int64))
-                s1 = [
-                    mom(round_half_up(r * xv[j] * 1e9).astype(np.int64))
-                    for j in range(p)
-                ]
-                s2 = {
-                    (j, k): mom(
-                        round_half_up(r * xv[j] * xv[k] * 1e9).astype(
-                            np.int64
-                        )
+            s2 = {
+                (j, k): mom(
+                    round_half_up(r * xv[j] * xv[k] * 1e9).astype(
+                        np.int64
                     )
-                    for j in range(p)
-                    for k in range(j, p)
-                }
-                gsum = np.zeros(p)
-                isum = np.zeros((p, p))
-                # axis points with nobody at risk (s0 = 0) are never
-                # event rows; the mask drops them before rounding
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    for j in range(p):
-                        term = s_t[j] / 1e9 - dtf * s1[j] / s0
-                        gsum[j] = (
+                )
+                for j in range(p)
+                for k in range(j, p)
+            }
+            gsum = np.zeros(p)
+            isum = np.zeros((p, p))
+            # axis points with nobody at risk (s0 = 0) are never
+            # event rows; the mask drops them before rounding
+            with np.errstate(divide="ignore", invalid="ignore"):
+                for j in range(p):
+                    term = s_t[j] / 1e9 - dtf * s1[j] / s0
+                    gsum[j] = (
+                        round_half_up(term[evm] * 1e9)
+                        .astype(np.int64)
+                        .sum()
+                        / 1e9
+                    )
+                for j in range(p):
+                    for k in range(j, p):
+                        term = dtf * (
+                            s2[(j, k)] / s0
+                            - (s1[j] / s0) * (s1[k] / s0)
+                        )
+                        isum[j, k] = isum[k, j] = (
                             round_half_up(term[evm] * 1e9)
                             .astype(np.int64)
                             .sum()
                             / 1e9
                         )
-                    for j in range(p):
-                        for k in range(j, p):
-                            term = dtf * (
-                                s2[(j, k)] / s0
-                                - (s1[j] / s0) * (s1[k] / s0)
-                            )
-                            isum[j, k] = isum[k, j] = (
-                                round_half_up(term[evm] * 1e9)
-                                .astype(np.int64)
-                                .sum()
-                                / 1e9
-                            )
-                info = isum
-                step = np.linalg.solve(info, gsum)
-                beta = [round(b + s, 9) for b, s in zip(beta, step)]
-            if return_se:
-                cov = np.linalg.inv(info)
-                return beta, [
-                    round(float(np.sqrt(cov[j, j])), 9)
-                    for j in range(p)
-                ]
-            return beta
+            info = isum
+            step = np.linalg.solve(info, gsum)
+            beta = [round(b + s, 9) for b, s in zip(beta, step)]
+        if return_se:
+            cov = np.linalg.inv(info)
+            return beta, [
+                round(float(np.sqrt(cov[j, j])), 9)
+                for j in range(p)
+            ]
+        return beta
 
     # r10: pin the narrow episode projection once — each Newton
     # iteration collapses it TWICE (entry + exit cells) and would

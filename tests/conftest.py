@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -27,3 +28,19 @@ def sf_dir():
     import os
 
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """``with distributed():`` runs its body with the driver-collect cap
+    at 0, so every fit takes its distributed path — the one switch the
+    driver == distributed tests use."""
+    from cancer_survival_etl_spark.operators import driverfit
+
+    @contextmanager
+    def force():
+        with monkeypatch.context() as m:
+            m.setattr(driverfit, "MAX_DRIVER_CELLS", 0)
+            yield
+
+    return force

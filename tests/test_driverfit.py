@@ -2,14 +2,16 @@
 cell driver Newton loops must be BIT-IDENTICAL to the distributed
 folds they replace — same nano-lattice roundings, same exact long
 sums, same float op order. Each test runs the same fit through both
-paths (the distributed one forced by disabling the bounded collect)
-and asserts exact equality of every returned number."""
+paths (the distributed one forced by the ``distributed`` fixture,
+which sets the one driver-collect cap to 0) and asserts exact equality
+of every returned number."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+import cancer_survival_etl_spark.llm.inference as inf
 import cancer_survival_etl_spark.operators.graph as gr
 import cancer_survival_etl_spark.operators.stats as st
 import cancer_survival_etl_spark.operators.survival as sv
@@ -45,23 +47,15 @@ def _cox_cohort(spark):
         {"ties": "efron", "strata_cols": ["st"]},
     ],
 )
-def test_cox_driver_path_bit_equal(spark, kw):
+def test_cox_driver_path_bit_equal(spark, distributed, kw):
     d = _cox_cohort(spark)
-    fast = sv.cox_ph(
-        d, ["x1", "x2"], iters=4, return_se=True, **kw
-    )
-    slow = sv.cox_ph(
-        d,
-        ["x1", "x2"],
-        iters=4,
-        return_se=True,
-        max_driver_cells=0,
-        **kw,
-    )
+    fast = sv.cox_ph(d, ["x1", "x2"], iters=4, return_se=True, **kw)
+    with distributed():
+        slow = sv.cox_ph(d, ["x1", "x2"], iters=4, return_se=True, **kw)
     assert fast == slow
 
 
-def test_glm_driver_paths_bit_equal(spark, monkeypatch):
+def test_glm_driver_paths_bit_equal(spark, distributed):
     d = spark.range(8000).select(
         ((F.col("id") % 8) / 8.0).alias("x"),
         F.greatest(
@@ -76,19 +70,13 @@ def test_glm_driver_paths_bit_equal(spark, monkeypatch):
     fast_o = st.glm_poisson(d, ["x"], "y", offset_col="lny", iters=5)
     fast_l = st.glm_logistic(d, ["x"], "yb", iters=5, return_se=True)
 
-    orig = st._fit_cells
-    monkeypatch.setattr(
-        st,
-        "_fit_cells",
-        lambda df, cols, max_cells=65536: orig(df, cols)[:2] + (None,),
-    )
-    assert st.glm_poisson(d, ["x"], "y", iters=5, return_se=True) == fast_p
-    assert (
-        st.glm_poisson(d, ["x"], "y", offset_col="lny", iters=5) == fast_o
-    )
-    assert (
-        st.glm_logistic(d, ["x"], "yb", iters=5, return_se=True) == fast_l
-    )
+    with distributed():
+        slow_p = st.glm_poisson(d, ["x"], "y", iters=5, return_se=True)
+        slow_o = st.glm_poisson(d, ["x"], "y", offset_col="lny", iters=5)
+        slow_l = st.glm_logistic(d, ["x"], "yb", iters=5, return_se=True)
+    assert slow_p == fast_p
+    assert slow_o == fast_o
+    assert slow_l == fast_l
 
 
 def _fg_cohort(spark):
@@ -116,7 +104,7 @@ def _fg_cohort(spark):
     )
 
 
-def test_fine_gray_driver_paths_bit_equal(spark, monkeypatch):
+def test_fine_gray_driver_paths_bit_equal(spark, distributed):
     d = _fg_cohort(spark)
     fast_u = sv.fine_gray(d, ["x1"], iters=4, return_se=True)
     fast_s = sv.fine_gray(
@@ -124,24 +112,20 @@ def test_fine_gray_driver_paths_bit_equal(spark, monkeypatch):
     )
     fast_r = sv.fine_gray_robust(d, ["x1"], cluster_col="cl", iters=4)
     fast_r0 = sv.fine_gray_robust(d, ["x1"], iters=4)
-    monkeypatch.setattr(
-        sv, "_fg_driver_collect", lambda *a, **k: None
-    )
-    assert sv.fine_gray(d, ["x1"], iters=4, return_se=True) == fast_u
-    assert (
-        sv.fine_gray(
+    with distributed():
+        slow_u = sv.fine_gray(d, ["x1"], iters=4, return_se=True)
+        slow_s = sv.fine_gray(
             d, ["x1"], iters=4, return_se=True, strata_cols=["st"]
         )
-        == fast_s
-    )
-    assert (
-        sv.fine_gray_robust(d, ["x1"], cluster_col="cl", iters=4)
-        == fast_r
-    )
-    assert sv.fine_gray_robust(d, ["x1"], iters=4) == fast_r0
+        slow_r = sv.fine_gray_robust(d, ["x1"], cluster_col="cl", iters=4)
+        slow_r0 = sv.fine_gray_robust(d, ["x1"], iters=4)
+    assert slow_u == fast_u
+    assert slow_s == fast_s
+    assert slow_r == fast_r
+    assert slow_r0 == fast_r0
 
 
-def test_cox_counting_driver_path_bit_equal(spark, monkeypatch):
+def test_cox_counting_driver_path_bit_equal(spark, distributed):
     d = spark.range(6000).select(
         ((F.col("id") % 6) / 6.0).alias("x1"),
         F.round((F.col("id") % 30) / 10.0, 1).alias("start"),
@@ -163,13 +147,12 @@ def test_cox_counting_driver_path_bit_equal(spark, monkeypatch):
         (F.col("gap") < 2.0).cast("int").alias("event"),
     )
     fast = sv.cox_ph_counting(d, ["x1"], iters=4, return_se=True)
-    monkeypatch.setattr(sv, "collect_cells", lambda *a, **k: None)
-    assert (
-        sv.cox_ph_counting(d, ["x1"], iters=4, return_se=True) == fast
-    )
+    with distributed():
+        slow = sv.cox_ph_counting(d, ["x1"], iters=4, return_se=True)
+    assert slow == fast
 
 
-def test_frailty_driver_path_bit_equal(spark, monkeypatch):
+def test_frailty_driver_path_bit_equal(spark, distributed):
     d = spark.range(6000).select(
         (F.col("id") % 150).cast("string").alias("cl"),
         F.greatest(
@@ -184,11 +167,12 @@ def test_frailty_driver_path_bit_equal(spark, monkeypatch):
         (F.col("id") % 4 > 0).cast("int").alias("event"),
     )
     fast = sv.shared_gamma_frailty(d, "cl", iters=3).collect()
-    monkeypatch.setattr(sv, "MAX_DRIVER_CELLS", 0)
-    assert sv.shared_gamma_frailty(d, "cl", iters=3).collect() == fast
+    with distributed():
+        slow = sv.shared_gamma_frailty(d, "cl", iters=3).collect()
+    assert slow == fast
 
 
-def test_cc_kcore_driver_paths_bit_equal(spark, monkeypatch):
+def test_cc_kcore_driver_paths_bit_equal(spark, distributed):
     # chains, a clique, isolated singletons from the nodes frame
     edges = spark.range(400).select(
         F.col("id").alias("id_a"),
@@ -206,21 +190,17 @@ def test_cc_kcore_driver_paths_bit_equal(spark, monkeypatch):
     fast_k = sorted(
         tuple(r) for r in gr.k_core(edges, 3).collect()
     )
-    monkeypatch.setattr(gr, "MAX_DRIVER_CELLS", 0)
-    slow = sorted(
-        tuple(r)
-        for r in gr.connected_components(
-            edges, nodes=nodes
-        ).collect()
-    )
-    slow_k = sorted(
-        tuple(r) for r in gr.k_core(edges, 3).collect()
-    )
+    with distributed():
+        slow = sorted(
+            tuple(r)
+            for r in gr.connected_components(edges, nodes=nodes).collect()
+        )
+        slow_k = sorted(tuple(r) for r in gr.k_core(edges, 3).collect())
     assert fast == slow
     assert fast_k == slow_k
 
 
-def test_gee_driver_path_bit_equal(spark, monkeypatch):
+def test_gee_driver_path_bit_equal(spark, distributed):
     d = spark.range(5000).select(
         (F.col("id") % 120).alias("cl"),
         ((F.col("id") % 5) / 5.0).alias("x"),
@@ -242,23 +222,14 @@ def test_gee_driver_path_bit_equal(spark, monkeypatch):
     fast = st.gee_logistic_exchangeable(
         d, "cl", ["x"], "y", iters=4, return_se=True
     )
-    orig = st._fit_cells
-    monkeypatch.setattr(
-        st,
-        "_fit_cells",
-        lambda df, cols, max_cells=65536: orig(df, cols)[:2] + (None,),
-    )
-    assert (
-        st.gee_logistic_exchangeable(
+    with distributed():
+        slow = st.gee_logistic_exchangeable(
             d, "cl", ["x"], "y", iters=4, return_se=True
         )
-        == fast
-    )
+    assert slow == fast
 
 
-def test_ordinal_multinomial_driver_paths_bit_equal(
-    spark, monkeypatch
-):
+def test_ordinal_multinomial_driver_paths_bit_equal(spark, distributed):
     d = spark.range(4000).select(
         ((F.col("id") % 4) / 4.0).alias("x"),
         F.when(F.col("id") % 7 < 2, F.lit("s1"))
@@ -270,18 +241,16 @@ def test_ordinal_multinomial_driver_paths_bit_equal(
     fast_m = st.multinomial_logistic(
         d, ["x"], "y", iters=4, return_se=True
     )
-    monkeypatch.setattr(st, "_ordmn_collect", lambda *a, **k: None)
-    assert (
-        st.ordinal_logistic(d, ["x"], "y", iters=4, return_se=True)
-        == fast_o
-    )
-    assert (
-        st.multinomial_logistic(d, ["x"], "y", iters=4, return_se=True)
-        == fast_m
-    )
+    with distributed():
+        slow_o = st.ordinal_logistic(d, ["x"], "y", iters=4, return_se=True)
+        slow_m = st.multinomial_logistic(
+            d, ["x"], "y", iters=4, return_se=True
+        )
+    assert slow_o == fast_o
+    assert slow_m == fast_m
 
 
-def test_quantile_driver_path_bit_equal(spark, monkeypatch):
+def test_quantile_driver_path_bit_equal(spark, distributed):
     d = spark.range(4000).select(
         ((F.col("id") % 50) / 50.0 * 4.0).alias("x"),
         F.round(
@@ -298,22 +267,17 @@ def test_quantile_driver_path_bit_equal(spark, monkeypatch):
             d, ["x"], "y", 0.7, iters=6
         ).collect()
     ]
-    orig = st._fit_cells
-    monkeypatch.setattr(
-        st,
-        "_fit_cells",
-        lambda df, cols, max_cells=65536: orig(df, cols)[:2] + (None,),
-    )
-    slow = [
-        tuple(r)
-        for r in st.quantile_regression(
-            d, ["x"], "y", 0.7, iters=6
-        ).collect()
-    ]
+    with distributed():
+        slow = [
+            tuple(r)
+            for r in st.quantile_regression(
+                d, ["x"], "y", 0.7, iters=6
+            ).collect()
+        ]
     assert fast == slow
 
 
-def test_gray_driver_paths_bit_equal(spark, monkeypatch):
+def test_gray_driver_paths_bit_equal(spark, distributed):
     d = spark.range(5000).select(
         F.when(F.col("id") % 2 == 0, F.lit("H")).otherwise(F.lit("L"))
         .alias("strat"),
@@ -332,17 +296,14 @@ def test_gray_driver_paths_bit_equal(spark, monkeypatch):
     )
     fast_u = sv.gray_test(d, "grp").collect()
     fast_s = sv.gray_test_stratified(d, "grp", ["strat"]).collect()
-    monkeypatch.setattr(
-        sv, "_gray_collect", lambda *a, **k: (None, None)
-    )
-    assert sv.gray_test(d, "grp").collect() == fast_u
-    assert (
-        sv.gray_test_stratified(d, "grp", ["strat"]).collect()
-        == fast_s
-    )
+    with distributed():
+        slow_u = sv.gray_test(d, "grp").collect()
+        slow_s = sv.gray_test_stratified(d, "grp", ["strat"]).collect()
+    assert slow_u == fast_u
+    assert slow_s == fast_s
 
 
-def test_km_driver_paths_bit_equal(spark, monkeypatch):
+def test_km_driver_paths_bit_equal(spark, distributed):
     d = spark.range(5000).select(
         (F.col("id") % 3).cast("string").alias("grp"),
         (
@@ -361,25 +322,22 @@ def test_km_driver_paths_bit_equal(spark, monkeypatch):
             d, ["grp"], "duration", "event", "w"
         ).collect()
     )
-    monkeypatch.setattr(sv, "_km_driver_curve", lambda *a, **k: None)
-    monkeypatch.setattr(
-        sv, "_km_weighted_driver_curve", lambda *a, **k: None
-    )
-    slow = sorted(
-        tuple(r)
-        for r in sv.km_curve(d, ["grp"], "duration", "event").collect()
-    )
-    slow_w = sorted(
-        tuple(r)
-        for r in sv.km_curve_weighted(
-            d, ["grp"], "duration", "event", "w"
-        ).collect()
-    )
+    with distributed():
+        slow = sorted(
+            tuple(r)
+            for r in sv.km_curve(d, ["grp"], "duration", "event").collect()
+        )
+        slow_w = sorted(
+            tuple(r)
+            for r in sv.km_curve_weighted(
+                d, ["grp"], "duration", "event", "w"
+            ).collect()
+        )
     assert fast == slow
     assert fast_w == slow_w
 
 
-def test_aipw_driver_paths_bit_equal(spark, monkeypatch):
+def test_aipw_driver_paths_bit_equal(spark, distributed):
     d = spark.range(4000).select(
         ((F.col("id") % 2)).cast("double").alias("x"),
         (F.col("id") % 3 == 0).cast("int").alias("arm"),
@@ -404,28 +362,20 @@ def test_aipw_driver_paths_bit_equal(spark, monkeypatch):
     fast_i = sv.aipw_survival_contrast(
         d, "arm", ["x"], [5, 15], censoring="ipcw"
     ).collect()
-    monkeypatch.setattr(
-        sv, "_aipw_driver_contrast", lambda *a, **k: None
-    )
-    assert (
-        sv.aipw_survival_contrast(d, "arm", ["x"], [5, 15]).collect()
-        == fast_a
-    )
-    assert (
-        sv.aipw_survival_contrast(
+    with distributed():
+        slow_a = sv.aipw_survival_contrast(d, "arm", ["x"], [5, 15]).collect()
+        slow_h = sv.aipw_survival_contrast(
             d, "arm", ["x"], [5, 15], augment=False
         ).collect()
-        == fast_h
-    )
-    assert (
-        sv.aipw_survival_contrast(
+        slow_i = sv.aipw_survival_contrast(
             d, "arm", ["x"], [5, 15], censoring="ipcw"
         ).collect()
-        == fast_i
-    )
+    assert slow_a == fast_a
+    assert slow_h == fast_h
+    assert slow_i == fast_i
 
 
-def test_cox_driver_path_half_lattice_ties(spark):
+def test_cox_driver_path_half_lattice_ties(spark, distributed):
     # ADVICE r10: features k/1024 put x*1e9 exactly on half-lattice
     # points (1e9 = 2^9·5^9), where np.rint (half-even) diverges from
     # Spark's F.round (HALF_UP). The twin must round half-up.
@@ -442,13 +392,12 @@ def test_cox_driver_path_half_lattice_ties(spark):
         (F.col("id") % 4 > 0).cast("int").alias("event"),
     )
     fast = sv.cox_ph(d, ["x1"], iters=4, return_se=True)
-    slow = sv.cox_ph(
-        d, ["x1"], iters=4, return_se=True, max_driver_cells=0
-    )
+    with distributed():
+        slow = sv.cox_ph(d, ["x1"], iters=4, return_se=True)
     assert fast == slow
 
 
-def test_null_screens_force_distributed_fallback(spark):
+def test_null_screens_force_distributed_fallback(spark, distributed):
     # nulls in features/duration/event must force the distributed
     # fold (which null-skips) — the numpy twin would garbage-cast
     # NaN to INT64_MIN and split NaN durations into per-row groups
@@ -471,13 +420,12 @@ def test_null_screens_force_distributed_fallback(spark):
         .alias("event"),
     )
     fast = sv.cox_ph(d, ["x1"], iters=3, return_se=True)
-    slow = sv.cox_ph(
-        d, ["x1"], iters=3, return_se=True, max_driver_cells=0
-    )
+    with distributed():
+        slow = sv.cox_ph(d, ["x1"], iters=3, return_se=True)
     assert fast == slow
 
 
-def test_frailty_null_cluster_forces_fallback(spark, monkeypatch):
+def test_frailty_null_cluster_forces_fallback(spark, distributed):
     # null cluster ids: the distributed EM's inner joins drop those
     # cells and countDistinct excludes null — the driver twin must
     # not keep a null-cluster group
@@ -494,11 +442,12 @@ def test_frailty_null_cluster_forces_fallback(spark, monkeypatch):
         (F.col("id") % 4 > 0).cast("int").alias("event"),
     )
     fast = sv.shared_gamma_frailty(d, "cl", iters=2).collect()
-    monkeypatch.setattr(sv, "MAX_DRIVER_CELLS", 0)
-    assert sv.shared_gamma_frailty(d, "cl", iters=2).collect() == fast
+    with distributed():
+        slow = sv.shared_gamma_frailty(d, "cl", iters=2).collect()
+    assert slow == fast
 
 
-def test_aft_driver_paths_bit_equal(spark, monkeypatch):
+def test_aft_driver_paths_bit_equal(spark, distributed):
     d = spark.range(6000).select(
         (F.col("id") % 2).cast("double").alias("x"),
         F.greatest(
@@ -518,13 +467,11 @@ def test_aft_driver_paths_bit_equal(spark, monkeypatch):
     )
     fast_w = sv.weibull_aft(d, ["x"], iters=6, return_se=True)
     fast_l = sv.loglogistic_aft(d, ["x"], iters=6, return_se=True)
-    monkeypatch.setattr(
-        sv, "_aft_collect", lambda cells, p, max_cells=0: None
-    )
-    assert sv.weibull_aft(d, ["x"], iters=6, return_se=True) == fast_w
-    assert (
-        sv.loglogistic_aft(d, ["x"], iters=6, return_se=True) == fast_l
-    )
+    with distributed():
+        slow_w = sv.weibull_aft(d, ["x"], iters=6, return_se=True)
+        slow_l = sv.loglogistic_aft(d, ["x"], iters=6, return_se=True)
+    assert slow_w == fast_w
+    assert slow_l == fast_l
 
 
 def _td_episodes(spark):
@@ -562,19 +509,19 @@ def _td_episodes(spark):
 
 
 @pytest.mark.parametrize("ties", ["breslow", "efron"])
-def test_cox_td_driver_path_bit_equal(spark, monkeypatch, ties):
+def test_cox_td_driver_path_bit_equal(spark, distributed, ties):
     d = _td_episodes(spark)
     fast = sv.cox_ph_time_dependent(
         d, ["x1", "x2"], iters=4, ties=ties, return_se=True
     )
-    monkeypatch.setattr(sv, "collect_cells", lambda *a, **k: None)
-    slow = sv.cox_ph_time_dependent(
-        d, ["x1", "x2"], iters=4, ties=ties, return_se=True
-    )
+    with distributed():
+        slow = sv.cox_ph_time_dependent(
+            d, ["x1", "x2"], iters=4, ties=ties, return_se=True
+        )
     assert fast == slow, (ties, fast, slow)
 
 
-def test_turnbull_driver_em_bit_equal(spark, monkeypatch):
+def test_turnbull_driver_em_bit_equal(spark, distributed):
     # mixed exact / interval / right-censored observations, two groups
     iv = spark.range(800).select(
         (F.col("id") % 2).cast("string").alias("grp"),
@@ -594,15 +541,13 @@ def test_turnbull_driver_em_bit_equal(spark, monkeypatch):
         .alias("right"),
     )
     fast = sv.turnbull_km(iv, ["grp"], iters=5).collect()
-    monkeypatch.setattr(sv, "MAX_DRIVER_CELLS", 0)
-    slow = sv.turnbull_km(iv, ["grp"], iters=5).collect()
+    with distributed():
+        slow = sv.turnbull_km(iv, ["grp"], iters=5).collect()
     key = lambda r: (r.grp, r.q_lo)
     assert sorted(fast, key=key) == sorted(slow, key=key)
 
 
-def test_trainer_driver_paths_bit_equal(spark, monkeypatch):
-    import cancer_survival_etl_spark.llm.inference as inf
-
+def test_trainer_driver_paths_bit_equal(spark, distributed):
     df = spark.range(3000).select(
         ((F.col("id") % 100) / 100.0).alias("x1"),
         ((F.col("id") * 61 % 100) / 100.0).alias("x2"),
@@ -617,30 +562,28 @@ def test_trainer_driver_paths_bit_equal(spark, monkeypatch):
     )
     fast_l = inf.logistic_train(df, ["x1", "x2"], "y", lr=1.0, iters=8)
     fast_q = inf.quantile_train(df, ["x1"], "yq", tau=0.9, lr=4.0, iters=8)
-    import cancer_survival_etl_spark.operators.driverfit as dfit
-
-    # the trainers import collect_cells at call time, so patching the
-    # driverfit module attribute forces their distributed fallback
-    monkeypatch.setattr(dfit, "collect_cells", lambda *a, **k: None)
-    slow_l = inf.logistic_train(df, ["x1", "x2"], "y", lr=1.0, iters=8)
-    slow_q = inf.quantile_train(df, ["x1"], "yq", tau=0.9, lr=4.0, iters=8)
+    with distributed():
+        slow_l = inf.logistic_train(df, ["x1", "x2"], "y", lr=1.0, iters=8)
+        slow_q = inf.quantile_train(
+            df, ["x1"], "yq", tau=0.9, lr=4.0, iters=8
+        )
     assert fast_l == slow_l
     assert fast_q == slow_q
 
 
-def test_triangle_driver_path_bit_equal(spark, monkeypatch):
+def test_triangle_driver_path_bit_equal(spark, distributed):
     edges = spark.createDataFrame(
         [(i % 23, (i * 7 + 1) % 23) for i in range(160)]
         + [(1, 2), (2, 3), (1, 3), (3, 4), (1, 4)],
         "id_a long, id_b long",
     ).filter("id_a != id_b")
     fast = gr.triangle_count(edges).collect()
-    monkeypatch.setattr(gr, "MAX_DRIVER_CELLS", 0)
-    slow = gr.triangle_count(edges).collect()
+    with distributed():
+        slow = gr.triangle_count(edges).collect()
     assert fast == slow
 
 
-def test_als_driver_path_bit_equal(spark, monkeypatch):
+def test_als_driver_path_bit_equal(spark, distributed):
     import cancer_survival_etl_spark.llm.factorization as fz
 
     ratings = spark.range(1600).select(
@@ -660,9 +603,10 @@ def test_als_driver_path_bit_equal(spark, monkeypatch):
         sorted(tuple(r) for r in fi.collect()),
         fh,
     )
-    monkeypatch.setattr(fz, "_als_driver_train", lambda *a, **k: None)
-    su, si, sh = fz.als_train(ratings, "u", "i", "r", k=3, iters=3,
-                              reg=0.001)
+    with distributed():
+        su, si, sh = fz.als_train(
+            ratings, "u", "i", "r", k=3, iters=3, reg=0.001
+        )
     slow = (
         sorted(tuple(r) for r in su.collect()),
         sorted(tuple(r) for r in si.collect()),
@@ -676,11 +620,184 @@ def test_als_driver_path_bit_equal(spark, monkeypatch):
     {"cluster_col": "cl"},
     {"strata_cols": ["st"]},
 ])
-def test_cox_robust_driver_path_bit_equal(spark, monkeypatch, kw):
+def test_cox_robust_driver_path_bit_equal(spark, distributed, kw):
     d = _cox_cohort(spark).withColumn(
         "cl", (F.col("x1") * 70).cast("long").cast("string")
     )
     fast = sv.cox_ph_robust(d, ["x1", "x2"], iters=4, **kw)
-    monkeypatch.setattr(sv, "collect_cells", lambda *a, **k: None)
-    slow = sv.cox_ph_robust(d, ["x1", "x2"], iters=4, **kw)
+    with distributed():
+        slow = sv.cox_ph_robust(d, ["x1", "x2"], iters=4, **kw)
     assert fast == slow, (kw, fast, slow)
+
+
+_EMPTY_FITS = {
+    "cox_ph": lambda d: sv.cox_ph(d, ["x"], iters=2),
+    "fine_gray": lambda d: sv.fine_gray(d, ["x"], iters=2),
+    "weibull_aft": lambda d: sv.weibull_aft(d, ["x"], iters=2),
+    "glm_poisson": lambda d: st.glm_poisson(d, ["x"], "y", iters=2),
+    "glm_logistic": lambda d: st.glm_logistic(d, ["x"], "event", iters=2),
+    "logistic_train": lambda d: inf.logistic_train(
+        d, ["x"], "event", iters=2
+    ),
+}
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+@pytest.mark.parametrize("fit", sorted(_EMPTY_FITS))
+def test_empty_cohort_named_error(spark, distributed, fit, path):
+    # both paths must name the fit, not fail with a LinAlgError /
+    # ZeroDivisionError (driver) or a None arithmetic TypeError
+    # (distributed)
+    d = spark.range(40).select(
+        ((F.col("id") % 5) / 5.0).alias("x"),
+        ((F.col("id") % 9) + 1).cast("double").alias("duration"),
+        (F.col("id") % 4 > 0).cast("int").alias("event"),
+        (F.col("id") % 3).cast("int").alias("cause"),
+        (F.col("id") % 6).cast("double").alias("y"),
+    ).filter("id < 0")
+    with pytest.raises(ValueError, match=f"^{fit}: empty input"):
+        if path == "driver":
+            _EMPTY_FITS[fit](d)
+        else:
+            with distributed():
+                _EMPTY_FITS[fit](d)
+
+
+def _screen_cohort(spark):
+    n = F.col("id")
+    dur = (F.floor(-F.log((n % 97 + 1) / 98.0) * 6) + 1).cast("long")
+    return spark.range(600).select(
+        "id",
+        ((n % 5) / 5.0).alias("x"),
+        (n % 3).cast("double").alias("gx"),
+        (n % 3).cast("string").alias("g"),
+        F.when(n % 3 == 0, "A").otherwise("B").alias("grp"),
+        dur.alias("duration"),
+        (n % 4 > 0).cast("int").alias("event"),
+        F.when(n % 5 == 0, 0).when(n % 5 < 3, 1).otherwise(2).alias("cause"),
+        (1.0 + (n % 7) / 7.0).alias("w"),
+        ((n * 7 % 11) / 11.0 < 0.3 + 0.1 * (n % 5)).cast("int")
+        .alias("yb"),
+        (n % 6).cast("double").alias("yc"),
+        F.when(n % 7 < 2, "s1").when(n % 7 < 5, "s2").otherwise("s3")
+        .alias("lvl"),
+        (n % 3).cast("double").alias("start"),
+        ((n % 3) + dur).cast("double").alias("stop"),
+    )
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+# each fit with the columns its null feature / null event-or-cause /
+# null group case blanks; fits without a group argument take a
+# group-coded covariate (gx) as their "group"
+_SCREEN_FITS = {
+    "fine_gray": (
+        lambda d: sv.fine_gray(
+            d, ["x"], iters=1, return_se=True, strata_cols=["g"]
+        ),
+        ("x", "cause", "g"),
+    ),
+    "weibull_aft": (
+        lambda d: sv.weibull_aft(d, ["x", "gx"], iters=1, return_se=True),
+        ("x", "event", "gx"),
+    ),
+    "gray_test": (
+        lambda d: sv.gray_test(d, "grp").collect(),
+        ("duration", "cause", "grp"),
+    ),
+    "km_curve": (
+        lambda d: _rows(sv.km_curve(d, ["g"], "duration", "event")),
+        ("duration", "event", "g"),
+    ),
+    "km_curve_weighted": (
+        lambda d: _rows(
+            sv.km_curve_weighted(d, ["g"], "duration", "event", "w")
+        ),
+        ("w", "event", "g"),
+    ),
+    "glm_logistic": (
+        lambda d: st.glm_logistic(d, ["x", "gx"], "yb", iters=1),
+        ("x", "yb", "gx"),
+    ),
+    "glm_poisson": (
+        lambda d: st.glm_poisson(d, ["x", "gx"], "yc", iters=1),
+        ("x", "yc", "gx"),
+    ),
+    "ordinal_logistic": (
+        lambda d: st.ordinal_logistic(d, ["x", "gx"], "lvl", iters=1),
+        ("x", "lvl", "gx"),
+    ),
+    "logistic_train": (
+        lambda d: inf.logistic_train(d, ["x", "gx"], "yb", iters=1),
+        ("x", "yb", "gx"),
+    ),
+    "cox_ph_time_dependent": (
+        lambda d: sv.cox_ph_time_dependent(
+            d, ["x", "gx"], iters=1, return_se=True
+        ),
+        ("x", "event", "gx"),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", [0, 1, 2], ids=["feature", "event", "group"])
+@pytest.mark.parametrize("fit", sorted(_SCREEN_FITS))
+def test_null_screens_driver_equals_distributed(
+    spark, distributed, fit, case
+):
+    # a null in a screened column sends the fit down its distributed
+    # path, so both runs must agree exactly — on the result, or on the
+    # named error (gray_test counts a null group as a third group)
+    run, cols = _SCREEN_FITS[fit]
+    col = cols[case]
+    d = _screen_cohort(spark).withColumn(
+        col, F.when(F.col("id") % 11 == 0, None).otherwise(F.col(col))
+    )
+
+    def outcome():
+        try:
+            return run(d)
+        except ValueError as e:
+            return repr(e)
+
+    fast = outcome()
+    with distributed():
+        slow = outcome()
+    assert fast == slow, (fit, col, fast, slow)
+
+
+def test_only_driverfit_owns_the_bounded_collect():
+    # every driver/distributed choice goes through
+    # driverfit.collect_bounded: no other module reads the cap or
+    # builds its own limit(n + 1) probe. The bounded collects that
+    # RAISE instead of falling back are the only other limit(n + 1)
+    # guards: absorbing_chain's transition cap and the max_x_patterns
+    # distinct-count checks.
+    import pathlib
+    import re
+
+    import cancer_survival_etl_spark
+
+    root = pathlib.Path(cancer_survival_etl_spark.__file__).parent
+    probe = re.compile(
+        r"\.limit\(\s*((?:[^()]|\([^()]*\))+?)\s*\+\s*1\s*\)"
+    )
+    allowed = {
+        ("operators/timeseries.py", "cap"),
+        ("operators/survival.py", "bound"),
+    }
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "operators/driverfit.py":
+            continue
+        src = path.read_text()
+        if "MAX_DRIVER_CELLS" in src:
+            bad.append((rel, "MAX_DRIVER_CELLS"))
+        for m in probe.finditer(src):
+            if (rel, m.group(1)) not in allowed:
+                bad.append((rel, m.group(0)))
+    assert not bad, bad
