@@ -23,7 +23,13 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .driverfit import cells_clean, collect_bounded, round_half_up
+from .driverfit import (
+    cells_clean,
+    collect_bounded,
+    exact_sum,
+    fold,
+    round_half_up,
+)
 
 
 def _cents(col: Column) -> Column:
@@ -2330,13 +2336,15 @@ def _fit_cells(df: DataFrame, cols):
     the r10 optimization shared by the whole GLM family (guide §1.2
     step 1: remove passes; §2.3: aggregate before you shuffle).
 
+    Complete cases only (R's ``na.omit``): rows with a null/NaN in any
+    of ``cols`` are dropped first, so every consumer — gradient,
+    information, meat — sees the same rows.
+
     BIT-EXACT by construction: every per-row nano-lattice term the
     scoring aggregates sum is a pure function of the referenced
     columns, so rows with identical ``cols`` contribute IDENTICAL
     rounded longs and Σ_rows round(expr·1e9) = Σ_cells _w·round(
-    expr·1e9) — the same exact-long total in any order. NULL/NaN
-    grouping matches row semantics (grouped keys propagate into the
-    same null/NaN terms sums already skip).
+    expr·1e9) — the same exact-long total in any order.
 
     Cost/benefit: ONE map-side-combined aggregate + count job up
     front (the count also materializes the lazy checkpoint, so every
@@ -2344,18 +2352,16 @@ def _fit_cells(df: DataFrame, cols):
     re-scanning the cohort). When the cohort does NOT collapse
     (more distinct patterns than the one driver-collect cap in
     driverfit.py — e.g. a continuous covariate at production scale),
-    falls back to the raw projection: the only waste is the one probe
-    pass, and iterations behave exactly as before.
+    falls back to the raw projection with ``_w`` = 1: the only waste
+    is the one probe pass, and every iteration scans the projection.
 
-    Returns ``(src, w, pdf)`` — the frame to aggregate over, the
-    weight column to multiply each rounded-long term by, and (r10
-    driver-solve fast path, driverfit.py) the COLLECTED cells as a
-    pandas frame when the collapse is bounded and fully finite, else
-    ``None``. When ``pdf`` is not None the GLM cores run their whole
-    Fisher loop on the driver over it — zero per-iteration Spark jobs,
-    bit-identical by the same Σ_cells identity (the numpy twin
-    transliterated from the fold, pinned in tests)."""
-    proj = df.select(*cols)
+    Returns ``(src, w, pdf)`` — the frame to aggregate over, its
+    ``_w`` weight column to multiply each rounded-long term by, and
+    (r10 driver-solve fast path, driverfit.py) the COLLECTED cells as
+    a pandas frame when the collapse is bounded and fully finite, else
+    ``None``. ``driverfit.fold`` runs a fit's numpy kernel on ``pdf``
+    when it is not None, else over the batches of ``src``."""
+    proj = df.select(*cols).dropna()
     cells = (
         proj.groupBy(*cols)
         .agg(F.count(F.lit(1)).alias("_w"))
@@ -2363,10 +2369,81 @@ def _fit_cells(df: DataFrame, cols):
     )
     pdf = collect_bounded(cells)
     if pdf is None:
-        return proj, F.lit(1).cast("long"), None
-    # screened here, not in the collect: a bounded collapse with
-    # null/non-finite keys still iterates over the pinned cells
+        proj = proj.withColumn("_w", F.lit(1).cast("long"))
+        return proj, F.col("_w"), None
+    # ±inf keys stay in Spark: the other consumers' driver twins do not
+    # reproduce their lattice semantics
     return cells, F.col("_w"), pdf if cells_clean(pdf, cols) else None
+
+
+def _glm_fit(
+    fit, df, feature_cols, y_col, offset_col, iters, return_se, srcw,
+    link,
+):
+    """Fisher scoring shared by ``glm_poisson`` and ``glm_logistic``,
+    with ``link`` the numpy kernel: ``link(η)`` returns per-cell arrays
+    (mean, weight) for g_j = Σ(y − mean)x_j and I_jk = Σ weight·x_j·x_k
+    (x₀ ≡ 1). Each iteration is one ``driverfit.fold`` of the kernel
+    over ``_fit_cells``' (src, w, pdf): every term·1e9 is rounded to an
+    exact int64 point, times the cell count ``_w``, and summed without
+    wrapping (a term outside int64 raises ``"<fit>: lattice
+    overflow"``). The driver solves the (p+1)×(p+1) system and rounds β
+    to 9 dp per iteration; the SEs come from the information matrix of
+    the penultimate iterate."""
+    import numpy as np
+
+    iters = int(iters)
+    if iters < 1:
+        raise ValueError(f"{fit}: iters must be >= 1")
+    feats = list(feature_cols)
+    p = len(feats)
+    if srcw is None:
+        srcw = _fit_cells(
+            df,
+            list(
+                dict.fromkeys(
+                    feats + [y_col] + ([offset_col] if offset_col else [])
+                )
+            ),
+        )
+    src, _, pdf = srcw
+
+    def moments(beta, b):
+        w = b["_w"].to_numpy().astype(np.int64)
+        xs = [1.0] + [b[c].to_numpy().astype(np.float64) for c in feats]
+        eta = (
+            b[offset_col].to_numpy().astype(np.float64)
+            if offset_col
+            else np.zeros(len(b))
+        ) + beta[0]
+        for j in range(p):
+            eta = eta + beta[j + 1] * xs[j + 1]
+        mean, weight = link(eta)
+        r = b[y_col].to_numpy().astype(np.float64) - mean
+        return [exact_sum(fit, r * x * 1e9, w) for x in xs] + [
+            exact_sum(fit, weight * xs[j] * xs[k] * 1e9, w)
+            for j in range(p + 1)
+            for k in range(j, p + 1)
+        ]
+
+    upper = [(j, k) for j in range(p + 1) for k in range(j, p + 1)]
+    beta = [0.0] * (p + 1)
+    for _ in range(iters):
+        tot = fold(src, pdf, functools.partial(moments, beta))
+        if not tot:
+            raise ValueError(f"{fit}: empty input")
+        tot = [v / 1e9 for v in tot]
+        info = np.zeros((p + 1, p + 1))
+        for (j, k), v in zip(upper, tot[p + 1:]):
+            info[j, k] = info[k, j] = v
+        step = np.linalg.solve(info, np.array(tot[: p + 1]))
+        beta = [round(b + s, 9) for b, s in zip(beta, step)]
+    if return_se:
+        cov = np.linalg.inv(info)
+        return beta, [
+            round(float(np.sqrt(cov[j, j])), 9) for j in range(p + 1)
+        ]
+    return beta
 
 
 def glm_poisson(
@@ -2386,15 +2463,16 @@ def glm_poisson(
     incidence/mortality modelling: y_i ~ Poisson(exp(β₀ + β·x_i +
     offset_i)). Returns [β₀, β_1, ..., β_p].
 
-    Fisher scoring (≡ Newton-Raphson for the canonical log link):
-    each iteration is ONE hash aggregate computing the p+1 gradient
-    components g_j = Σ(y−μ)x_j and the (p+1)(p+2)/2 information cells
-    I_jk = Σ μ·x_j·x_k, every per-row term rounded onto the 1e-9
-    nano-lattice and summed as exact longs — so the fit is
-    BIT-IDENTICAL under any partitioning (the cox_ph/logistic_train
-    contract); the driver solves the (p+1)×(p+1) system and rounds β
-    to 9 dp per iteration. The data never leaves the executors; no
-    per-row Python anywhere.
+    Fisher scoring (≡ Newton-Raphson for the canonical log link) on
+    complete cases: each iteration folds its numpy link kernel over
+    the weighted cells (``_glm_fit``; on the driver when the cells are
+    bounded, else per Arrow batch in Spark) into the p+1 gradient
+    components g_j = Σ(y−μ)x_j and the (p+1)(p+2)/2
+    information cells I_jk = Σ μ·x_j·x_k, every per-row term rounded
+    onto the 1e-9 nano-lattice and summed as exact integers — so the
+    fit is BIT-IDENTICAL under any partitioning (the
+    cox_ph/logistic_train contract); the driver solves the
+    (p+1)×(p+1) system and rounds β to 9 dp per iteration.
 
     With ``return_se=True`` the Wald SEs come from the information
     matrix of the PENULTIMATE iterate (the one that produced the
@@ -2403,114 +2481,14 @@ def glm_poisson(
     ``iters >= 1``."""
     import numpy as np
 
-    iters = int(iters)
-    if iters < 1:
-        raise ValueError("glm_poisson: iters must be >= 1")
-    feats = list(feature_cols)
-    p = len(feats)
-    beta = [0.0] * (p + 1)
-    nano = F.lit(1000000000.0)
-    y = F.col(y_col).cast("double")
-    off = F.col(offset_col).cast("double") if offset_col else F.lit(0.0)
+    def link(eta):  # the _glm_fit kernel: mean = weight = e^η
+        mu = np.exp(eta)
+        return mu, mu
 
-    # r10: collapse identical rows to weighted cells ONCE, then every
-    # scoring iteration aggregates the tiny pinned frame (bit-exact —
-    # see _fit_cells; callers that already hold cells pass _srcw)
-    if _srcw is None:
-        _srcw = _fit_cells(
-            df,
-            list(
-                dict.fromkeys(
-                    feats + [y_col] + ([offset_col] if offset_col else [])
-                )
-            ),
-        )
-    src, w, pdfc = _srcw
-
-    # r10 driver-solve fast path (driverfit.py): bounded collected
-    # cells -> the whole Fisher loop runs on the driver, numpy twin
-    # transliterated term-for-term from the fold below (same float op
-    # order, same nano roundings, exact int64 sums) — bit-identical,
-    # pinned in tests.
-    if pdfc is not None:
-        if len(pdfc) == 0:
-            raise ValueError("glm_poisson: empty input")
-        wn = pdfc["_w"].to_numpy().astype(np.int64)
-        yn = pdfc[y_col].to_numpy().astype(np.float64)
-        offn = (
-            pdfc[offset_col].to_numpy().astype(np.float64)
-            if offset_col
-            else 0.0
-        )
-        xn = [1.0] + [
-            pdfc[c].to_numpy().astype(np.float64) for c in feats
-        ]
-        for _ in range(iters):
-            eta = offn + beta[0]
-            for j in range(p):
-                eta = eta + beta[j + 1] * xn[j + 1]
-            mu = np.exp(eta)
-            g = np.zeros(p + 1)
-            info = np.zeros((p + 1, p + 1))
-            for j in range(p + 1):
-                g[j] = (
-                    round_half_up((yn - mu) * xn[j] * 1e9).astype(np.int64)
-                    * wn
-                ).sum() / 1e9
-            for j in range(p + 1):
-                for k in range(j, p + 1):
-                    info[j, k] = info[k, j] = (
-                        round_half_up(mu * xn[j] * xn[k] * 1e9).astype(
-                            np.int64
-                        )
-                        * wn
-                    ).sum() / 1e9
-            step = np.linalg.solve(info, g)
-            beta = [round(b + s, 9) for b, s in zip(beta, step)]
-        if return_se:
-            cov = np.linalg.inv(info)
-            return beta, [
-                round(float(np.sqrt(cov[j, j])), 9) for j in range(p + 1)
-            ]
-        return beta
-
-    xs = [F.lit(1.0)] + [F.col(c).cast("double") for c in feats]
-    for _ in range(iters):
-        eta = off + F.lit(beta[0])
-        for j, c in enumerate(feats):
-            eta = eta + F.lit(beta[j + 1]) * F.col(c).cast("double")
-        mu = F.exp(eta)
-        aggs = []
-        for j in range(p + 1):
-            aggs.append(
-                F.sum(
-                    F.round((y - mu) * xs[j] * nano, 0).cast("long") * w
-                ).alias(f"g{j}")
-            )
-        for j in range(p + 1):
-            for k in range(j, p + 1):
-                aggs.append(
-                    F.sum(
-                        F.round(mu * xs[j] * xs[k] * nano, 0).cast("long")
-                        * w
-                    ).alias(f"i{j}_{k}")
-                )
-        row = src.agg(*aggs).collect()[0]
-        if row["g0"] is None:  # no rows: every sum is null
-            raise ValueError("glm_poisson: empty input")
-        g = np.array([row[f"g{j}"] / 1e9 for j in range(p + 1)])
-        info = np.zeros((p + 1, p + 1))
-        for j in range(p + 1):
-            for k in range(j, p + 1):
-                info[j, k] = info[k, j] = row[f"i{j}_{k}"] / 1e9
-        step = np.linalg.solve(info, g)
-        beta = [round(b + s, 9) for b, s in zip(beta, step)]
-    if return_se:
-        cov = np.linalg.inv(info)
-        return beta, [
-            round(float(np.sqrt(cov[j, j])), 9) for j in range(p + 1)
-        ]
-    return beta
+    return _glm_fit(
+        "glm_poisson", df, feature_cols, y_col, offset_col, iters,
+        return_se, _srcw, link,
+    )
 
 
 def glm_logistic(
@@ -2525,10 +2503,11 @@ def glm_logistic(
     the Newton-converging sibling of ``llm/inference.py::
     logistic_train`` (plain gradient descent, ~100 passes at a tuned
     lr): g_j = Σ(y−p)x_j, I_jk = Σ p(1−p)x_j x_k with p = σ(β₀+β·x),
-    one nano-lattice hash aggregate per iteration, quadratic
-    convergence in ~6-8 passes with NO learning rate to tune.
-    Returns [β₀, β_1, ..., β_p], bit-identical under any partitioning
-    (the glm_poisson/cox_ph exactness contract).
+    one fold of its link kernel per iteration (the
+    ``glm_poisson`` mechanism), quadratic convergence in ~6-8 passes
+    with NO learning rate to tune. Returns [β₀, β_1, ..., β_p],
+    bit-identical under any partitioning (the glm_poisson/cox_ph
+    exactness contract).
 
     With ``return_se=True`` the Wald SEs come from the information
     matrix of the PENULTIMATE iterate (the one that produced the
@@ -2537,96 +2516,14 @@ def glm_logistic(
     ``iters >= 1``."""
     import numpy as np
 
-    iters = int(iters)
-    if iters < 1:
-        raise ValueError("glm_logistic: iters must be >= 1")
-    feats = list(feature_cols)
-    p = len(feats)
-    beta = [0.0] * (p + 1)
-    nano = F.lit(1000000000.0)
-    y = F.col(y_col).cast("double")
-    # r10: weighted-cell collapse (see _fit_cells / glm_poisson)
-    if _srcw is None:
-        _srcw = _fit_cells(df, list(dict.fromkeys(feats + [y_col])))
-    src, w, pdfc = _srcw
+    def link(eta):  # the _glm_fit kernel: p = σ(η), weight p(1−p)
+        prob = 1.0 / (1.0 + np.exp(-eta))
+        return prob, prob * (1.0 - prob)
 
-    # r10 driver-solve fast path — the glm_poisson pattern on the
-    # IRLS terms (bit-identical numpy twin of the fold below)
-    if pdfc is not None:
-        if len(pdfc) == 0:
-            raise ValueError("glm_logistic: empty input")
-        wn = pdfc["_w"].to_numpy().astype(np.int64)
-        yn = pdfc[y_col].to_numpy().astype(np.float64)
-        xn = [1.0] + [
-            pdfc[c].to_numpy().astype(np.float64) for c in feats
-        ]
-        for _ in range(iters):
-            eta = np.zeros(len(wn)) + beta[0]
-            for j in range(p):
-                eta = eta + beta[j + 1] * xn[j + 1]
-            prob = 1.0 / (1.0 + np.exp(-eta))
-            wgt = prob * (1.0 - prob)
-            g = np.zeros(p + 1)
-            info = np.zeros((p + 1, p + 1))
-            for j in range(p + 1):
-                g[j] = (
-                    round_half_up((yn - prob) * xn[j] * 1e9).astype(np.int64)
-                    * wn
-                ).sum() / 1e9
-            for j in range(p + 1):
-                for k in range(j, p + 1):
-                    info[j, k] = info[k, j] = (
-                        round_half_up(wgt * xn[j] * xn[k] * 1e9).astype(
-                            np.int64
-                        )
-                        * wn
-                    ).sum() / 1e9
-            step = np.linalg.solve(info, g)
-            beta = [round(b + s, 9) for b, s in zip(beta, step)]
-        if return_se:
-            cov = np.linalg.inv(info)
-            return beta, [
-                round(float(np.sqrt(cov[j, j])), 9) for j in range(p + 1)
-            ]
-        return beta
-    xs = [F.lit(1.0)] + [F.col(c).cast("double") for c in feats]
-    for _ in range(iters):
-        eta = F.lit(beta[0])
-        for j, c in enumerate(feats):
-            eta = eta + F.lit(beta[j + 1]) * F.col(c).cast("double")
-        prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-        wgt = prob * (F.lit(1.0) - prob)
-        aggs = []
-        for j in range(p + 1):
-            aggs.append(
-                F.sum(
-                    F.round((y - prob) * xs[j] * nano, 0).cast("long") * w
-                ).alias(f"g{j}")
-            )
-        for j in range(p + 1):
-            for k in range(j, p + 1):
-                aggs.append(
-                    F.sum(
-                        F.round(wgt * xs[j] * xs[k] * nano, 0).cast("long")
-                        * w
-                    ).alias(f"i{j}_{k}")
-                )
-        row = src.agg(*aggs).collect()[0]
-        if row["g0"] is None:  # no rows: every sum is null
-            raise ValueError("glm_logistic: empty input")
-        g = np.array([row[f"g{j}"] / 1e9 for j in range(p + 1)])
-        info = np.zeros((p + 1, p + 1))
-        for j in range(p + 1):
-            for k in range(j, p + 1):
-                info[j, k] = info[k, j] = row[f"i{j}_{k}"] / 1e9
-        step = np.linalg.solve(info, g)
-        beta = [round(b + s, 9) for b, s in zip(beta, step)]
-    if return_se:
-        cov = np.linalg.inv(info)
-        return beta, [
-            round(float(np.sqrt(cov[j, j])), 9) for j in range(p + 1)
-        ]
-    return beta
+    return _glm_fit(
+        "glm_logistic", df, feature_cols, y_col, None, iters, return_se,
+        _srcw, link,
+    )
 
 
 def diff_in_diff(

@@ -34,11 +34,18 @@ volume.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .driverfit import collect_bounded, collect_cells, round_half_up
+from .driverfit import (
+    collect_bounded,
+    collect_cells,
+    exact_sum,
+    fold,
+    round_half_up,
+)
 from .windows import global_prefix_sum, grouped_prefix_sum
 
 
@@ -11123,43 +11130,102 @@ def population_attributable_fraction(
     )
 
 
-def _aft_driver_fit(cells, p, iters, terms):
-    """Shared driver-side Newton loop for the AFT family over
-    collected cells — numpy twin transliterated term-for-term from
-    the distributed folds in ``weibull_aft``/``loglogistic_aft``
-    (same per-cell expr·n·1e9 roundings, exact int64 sums, same ±1
-    step cap), bit-identical (pinned in tests). ``terms(z, dlt, xs,
-    sigma, tsum, q)`` fills (g, hess) for one iteration."""
+def _aft_fit(
+    fit, df, feature_cols, duration_col, event_col, iters, return_se,
+    terms,
+):
+    """The Newton fit shared by ``weibull_aft`` and ``loglogistic_aft``
+    over θ = (μ, β…, ln σ), with ``terms`` the distribution's numpy
+    kernel: ``terms(z, δ)`` returns per-cell arrays (a, b, c, s, h) of
+
+        g_βj = a·x_j/σ,  g_lnσ = s,  H_βjβk = b·x_j·x_k/σ²,
+        H_βj,lnσ = c·x_j/σ,  H_lnσ,lnσ = h        (x₀ ≡ 1 for μ).
+
+    Complete cases only (R's ``na.omit``): rows with a null/NaN
+    feature, duration or event are dropped, then subjects collapse ONCE
+    to (x-pattern, ln t, event) cells with counts n. Every pass is one
+    ``driverfit.fold`` of the kernel over the cells — on the driver
+    when they are bounded, else per Arrow batch in Spark — with each
+    term·n·1e9 rounded to an exact int64 point and summed without
+    wrapping, so θ̂ is bit-identical under any partitioning or batch
+    split. A term outside int64 raises ``"<fit>: lattice overflow"``."""
     import numpy as np
 
-    w = cells["_n"].to_numpy().astype(np.float64)
-    yv = cells["_y"].to_numpy().astype(np.float64)
-    dlt = cells["_d"].to_numpy().astype(np.float64)
-    xs = [1.0] + [
-        cells[f"_x{j}"].to_numpy().astype(np.float64) for j in range(p)
-    ]
-    q = p + 2
-    sy = round_half_up(yv * w * 1e9).astype(np.int64).sum()
-    nn = int(cells["_n"].to_numpy().astype(np.int64).sum())
-    theta = [round(sy / 1e9 / nn, 9)] + [0.0] * p + [0.0]
+    iters = int(iters)
+    if iters < 1:
+        raise ValueError(f"{fit}: iters must be >= 1")
+    feats = list(feature_cols)
+    p = len(feats)
+    q = p + 2  # mu, betas, ln sigma
+    dur = F.col(duration_col).cast("double")
+    y = F.when(
+        dur <= 0,
+        F.raise_error(
+            F.lit(f"{fit}: duration must be > 0 (ln t)")
+        ).cast("double"),
+    ).otherwise(F.log(dur))
+    cells = (
+        df.dropna(subset=[*feats, duration_col, event_col])
+        .groupBy(
+            *[F.col(c).cast("double").alias(f"_x{j}") for j, c in
+              enumerate(feats)],
+            y.alias("_y"),
+            F.col(event_col).cast("long").alias("_d"),
+        )
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .localCheckpoint(eager=False)
+    )
+    pdf = collect_bounded(cells)
 
-    def tsum(expr):
-        return round_half_up(expr * w * 1e9).astype(np.int64).sum() / 1e9
+    def init(b):  # [Σ round(ln t·n·1e9), Σ n]
+        n = b["_n"].to_numpy()
+        yn = b["_y"].to_numpy().astype(np.float64)
+        sy = exact_sum(fit, yn * n.astype(np.float64) * 1e9)
+        return [sy, int(n.sum())]
 
-    info = None
-    for _ in range(iters):
+    def moments(theta, b):
+        n = b["_n"].to_numpy().astype(np.float64)
+        xs = [1.0] + [
+            b[f"_x{j}"].to_numpy().astype(np.float64) for j in range(p)
+        ]
         sigma = float(np.exp(theta[-1]))
-        eta = np.zeros(len(yv)) + theta[0]
+        eta = np.zeros(len(b)) + theta[0]
         for j in range(p):
             eta = eta + theta[j + 1] * xs[j + 1]
-        z = (yv - eta) / sigma
-        g, hess = terms(z, dlt, xs, sigma, tsum, q)
+        z = (b["_y"].to_numpy().astype(np.float64) - eta) / sigma
+        a, bb, c, s, h = terms(z, b["_d"].to_numpy().astype(np.float64))
+        grad = [a * x / sigma for x in xs] + [s]
+        hess = []  # upper triangle, row-major
+        for j in range(p + 1):
+            hess += [
+                bb * xs[j] * xs[k] / (sigma * sigma) for k in range(j, p + 1)
+            ]
+            hess.append(c * xs[j] / sigma)
+        return [exact_sum(fit, t * n * 1e9) for t in grad + hess + [h]]
+
+    tot = fold(cells, pdf, init)
+    if not tot:
+        raise ValueError(f"{fit}: empty input")
+    # np.round, not round(): they differ in the last bit on a few
+    # values, and the published fits start from numpy's
+    theta = [np.round(tot[0] / 1e9 / tot[1], 9)] + [0.0] * p + [0.0]
+    upper = [(j, k) for j in range(q) for k in range(j, q)]
+    info = None
+    for _ in range(iters):
+        tot = [v / 1e9 for v in fold(cells, pdf, partial(moments, theta))]
+        hess = np.zeros((q, q))
+        for (j, k), v in zip(upper, tot[q:]):
+            hess[j, k] = hess[k, j] = v
         info = -hess
-        step = np.clip(np.linalg.solve(info, g), -1.0, 1.0)
+        step = np.clip(np.linalg.solve(info, np.array(tot[:q])), -1.0, 1.0)
         theta = [round(t + s, 9) for t, s in zip(theta, step)]
     beta = theta[:-1]
     sigma = round(float(np.exp(theta[-1])), 9)
-    return beta, sigma, info
+    if return_se:
+        cov = np.linalg.inv(info)
+        se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(q)]
+        return beta, sigma, se
+    return beta, sigma
 
 
 def weibull_aft(
@@ -11187,13 +11253,17 @@ def weibull_aft(
         H_βs  = −x_j(wz + w − δ)/σ
         H_ss  = −wz² − (w − δ)z
 
-    Subjects collapse ONCE to (x-pattern, duration, event) cells
-    with counts before the loop (``shared_gamma_frailty``'s shape);
-    each iteration is ONE map-side-combined aggregate over the cell
-    frame — per-cell terms × n nano-rounded before exact long sums,
-    so θ̂ is bit-identical under any partitioning (cells are unique
-    keys, the per-subject-rounding contract collapses to per-cell).
-    The driver holds θ and the (p+2)² Hessian (numpy solve).
+    Complete cases (rows with a null/NaN feature, duration or event
+    are dropped, as R's ``na.omit``) collapse ONCE to (x-pattern,
+    ln t, event) cells with counts before the loop; each iteration is
+    one fold of its numpy terms kernel over the cells
+    (``_aft_fit``: on the driver when the cells are bounded, else per
+    Arrow batch in Spark) — per-cell terms × n nano-rounded to exact
+    int64 points and summed without wrapping, so θ̂ is bit-identical
+    under any partitioning (cells are unique keys, the
+    per-subject-rounding contract collapses to per-cell); a term
+    outside int64 raises ``weibull_aft: lattice overflow``. The
+    driver holds θ and the (p+2)² Hessian (numpy solve).
     Initialization: μ = cell-weighted mean ln t (one extra pass),
     β = 0, ln σ = 0 — the survreg convention that keeps early z
     bounded. Two deterministic safeguards, both inactive at any
@@ -11213,133 +11283,20 @@ def weibull_aft(
     """
     import numpy as np
 
-    iters = int(iters)
-    if iters < 1:
-        raise ValueError("weibull_aft: iters must be >= 1")
-    feats = list(feature_cols)
-    p = len(feats)
-    q = p + 2  # mu, betas, ln sigma
-    nano = F.lit(1000000000.0)
-
-    dur = F.col(duration_col).cast("double")
-    y = F.when(
-        dur <= 0,
-        F.raise_error(
-            F.lit("weibull_aft: duration must be > 0 (ln t)")
-        ).cast("double"),
-    ).otherwise(F.log(dur))
-    cells = df.groupBy(
-        *[F.col(c).cast("double").alias(f"_x{j}") for j, c in
-          enumerate(feats)],
-        y.alias("_y"),
-        F.col(event_col).cast("long").alias("_d"),
-    ).agg(F.count(F.lit(1)).alias("_n"))
-    cells = cells.localCheckpoint(eager=False)
-
-    # r10 driver-solve fast path (driverfit.py): bounded cells — the
-    # whole Newton loop runs on the driver; numpy twin of the fold
-    # below, bit-identical (pinned in tests). Null/non-finite features
-    # or ln t and null events fall back: the twin does not reproduce
-    # their lattice semantics (a null event NaN-casts to int64 garbage).
-    _pdfc = collect_bounded(
-        cells, [f"_x{j}" for j in range(p)] + ["_y"], ["_d"]
-    )
-    if _pdfc is not None:
-        if len(_pdfc) == 0:
-            raise ValueError("weibull_aft: empty input")
-
-        def _terms(z, dlt, xs, sigma, tsum, q):
-            wv = np.exp(np.minimum(z, 15.0))
-            g = np.zeros(q)
-            hess = np.zeros((q, q))
-            for j in range(p + 1):
-                g[j] = tsum((wv - dlt) * xs[j] / sigma)
-            g[q - 1] = tsum((wv - dlt) * z - dlt)
-            for j in range(p + 1):
-                for k in range(j, p + 1):
-                    hess[j, k] = hess[k, j] = tsum(
-                        -wv * xs[j] * xs[k] / (sigma * sigma)
-                    )
-            for j in range(p + 1):
-                hess[j, q - 1] = hess[q - 1, j] = tsum(
-                    -xs[j] * (wv * z + wv - dlt) / sigma
-                )
-            hess[q - 1, q - 1] = tsum(-wv * z * z - (wv - dlt) * z)
-            return g, hess
-
-        beta, sigma, info = _aft_driver_fit(_pdfc, p, iters, _terms)
-        if return_se:
-            cov = np.linalg.inv(info)
-            se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(q)]
-            return beta, sigma, se
-        return beta, sigma
-
-    nf = F.col("_n").cast("double")
-    r0 = cells.agg(
-        F.sum(F.round(F.col("_y") * nf * nano, 0).cast("long")).alias(
-            "_sy"
-        ),
-        F.sum("_n").alias("_nn"),
-    ).collect()[0]
-    if r0["_nn"] is None:  # no cells
-        raise ValueError("weibull_aft: empty input")
-    theta = [round(r0["_sy"] / 1e9 / r0["_nn"], 9)] + [0.0] * p + [0.0]
-
-    info = None
-    for _ in range(iters):
-        sigma = float(np.exp(theta[-1]))
-        eta = F.lit(theta[0])
-        for j in range(p):
-            eta = eta + F.lit(theta[j + 1]) * F.col(f"_x{j}")
-        z = (F.col("_y") - eta) / F.lit(sigma)
-        w = F.exp(F.least(z, F.lit(15.0)))
-        dlt = F.col("_d").cast("double")
-        xs = [F.lit(1.0)] + [F.col(f"_x{j}") for j in range(p)]
-
-        def tsum(expr, alias):
-            return F.sum(
-                F.round(expr * nf * nano, 0).cast("long")
-            ).alias(alias)
-
-        aggs = []
-        for j in range(p + 1):
-            aggs.append(tsum((w - dlt) * xs[j] / F.lit(sigma), f"g{j}"))
-        aggs.append(tsum((w - dlt) * z - dlt, f"g{q - 1}"))
-        for j in range(p + 1):
-            for k in range(j, p + 1):
-                aggs.append(
-                    tsum(
-                        -w * xs[j] * xs[k] / F.lit(sigma * sigma),
-                        f"h{j}_{k}",
-                    )
-                )
-        for j in range(p + 1):
-            aggs.append(
-                tsum(
-                    -xs[j] * (w * z + w - dlt) / F.lit(sigma),
-                    f"h{j}_{q - 1}",
-                )
-            )
-        aggs.append(
-            tsum(-w * z * z - (w - dlt) * z, f"h{q - 1}_{q - 1}")
+    def terms(z, d):  # the _aft_fit kernel: (a, b, c, s, h) per cell
+        w = np.exp(np.minimum(z, 15.0))
+        return (
+            w - d,
+            -w,
+            -(w * z + w - d),
+            (w - d) * z - d,
+            -w * z * z - (w - d) * z,
         )
-        row = cells.agg(*aggs).collect()[0]
-        g = np.array([row[f"g{j}"] / 1e9 for j in range(q)])
-        hess = np.zeros((q, q))
-        for j in range(q):
-            for k in range(j, q):
-                hess[j, k] = hess[k, j] = row[f"h{j}_{k}"] / 1e9
-        info = -hess
-        step = np.clip(np.linalg.solve(info, g), -1.0, 1.0)
-        theta = [round(t + s, 9) for t, s in zip(theta, step)]
 
-    beta = theta[:-1]
-    sigma = round(float(np.exp(theta[-1])), 9)
-    if return_se:
-        cov = np.linalg.inv(info)
-        se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(q)]
-        return beta, sigma, se
-    return beta, sigma
+    return _aft_fit(
+        "weibull_aft", df, feature_cols, duration_col, event_col, iters,
+        return_se, terms,
+    )
 
 
 def piecewise_exponential_ph(
@@ -11372,7 +11329,7 @@ def piecewise_exponential_ph(
          fit IDENTICAL to the subject-level one — and ``glm_poisson``
          runs on the cell frame with offset ln Y and K−1 interval
          dummies (first interval = reference), one nano-lattice
-         aggregate per Fisher iteration, bit-identical under any
+         fold per Fisher iteration, bit-identical under any
          partitioning.
 
     With no covariates the model is saturated, so the fitted
@@ -11611,139 +11568,27 @@ def loglogistic_aft(
 
     The same cell shape, lattice, init, ±1 step cap, and z-clamp
     contract as ``weibull_aft`` (see it for the scale story):
-    subjects collapse ONCE to (x-pattern, ln t, event) cells, one
-    nano-lattice aggregate per iteration, bit-identical under any
-    partitioning, pinned to a pure-Python twin. Here the clamp
+    complete cases collapse ONCE to (x-pattern, ln t, event) cells,
+    one fold of its terms kernel per iteration,
+    bit-identical under any partitioning, pinned to a pure-Python
+    twin. Here the clamp
     |z| ≤ 30 only stabilizes e^z inside s — s itself is bounded in
     (0,1) so the lattice cannot overflow; the clamp keeps exp()
     finite. Returns (beta, sigma) or (beta, sigma, se).
     """
     import numpy as np
 
-    iters = int(iters)
-    if iters < 1:
-        raise ValueError("loglogistic_aft: iters must be >= 1")
-    feats = list(feature_cols)
-    p = len(feats)
-    q = p + 2
-    nano = F.lit(1000000000.0)
+    def terms(z, d):  # the _aft_fit kernel: (a, b, c, s, h) per cell
+        zc = np.minimum(np.maximum(z, -30.0), 30.0)
+        s = 1.0 / (1.0 + np.exp(-zc))
+        gz = d - s * (1.0 + d)
+        gzp = -s * (1.0 - s) * (1.0 + d)
+        return -gz, gzp, z * gzp + gz, -z * gz - d, z * z * gzp + z * gz
 
-    dur = F.col(duration_col).cast("double")
-    y = F.when(
-        dur <= 0,
-        F.raise_error(
-            F.lit("loglogistic_aft: duration must be > 0 (ln t)")
-        ).cast("double"),
-    ).otherwise(F.log(dur))
-    cells = df.groupBy(
-        *[F.col(c).cast("double").alias(f"_x{j}") for j, c in
-          enumerate(feats)],
-        y.alias("_y"),
-        F.col(event_col).cast("long").alias("_d"),
-    ).agg(F.count(F.lit(1)).alias("_n"))
-    cells = cells.localCheckpoint(eager=False)
-
-    # r10 driver-solve fast path (driverfit.py; the weibull_aft
-    # pattern): bit-identical numpy twin of the fold below.
-    _pdfc = collect_bounded(
-        cells, [f"_x{j}" for j in range(p)] + ["_y"], ["_d"]
+    return _aft_fit(
+        "loglogistic_aft", df, feature_cols, duration_col, event_col,
+        iters, return_se, terms,
     )
-    if _pdfc is not None:
-
-        def _terms(z, dlt, xs, sigma, tsum, q):
-            zc = np.minimum(np.maximum(z, -30.0), 30.0)
-            s = 1.0 / (1.0 + np.exp(-zc))
-            gz = dlt - s * (1.0 + dlt)
-            gzp = -s * (1.0 - s) * (1.0 + dlt)
-            g = np.zeros(q)
-            hess = np.zeros((q, q))
-            for j in range(p + 1):
-                g[j] = tsum(-gz * xs[j] / sigma)
-            g[q - 1] = tsum(-z * gz - dlt)
-            for j in range(p + 1):
-                for k in range(j, p + 1):
-                    hess[j, k] = hess[k, j] = tsum(
-                        gzp * xs[j] * xs[k] / (sigma * sigma)
-                    )
-            for j in range(p + 1):
-                hess[j, q - 1] = hess[q - 1, j] = tsum(
-                    xs[j] * (z * gzp + gz) / sigma
-                )
-            hess[q - 1, q - 1] = tsum(z * z * gzp + z * gz)
-            return g, hess
-
-        beta, sigma, info = _aft_driver_fit(_pdfc, p, iters, _terms)
-        if return_se:
-            cov = np.linalg.inv(info)
-            se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(q)]
-            return beta, sigma, se
-        return beta, sigma
-
-    nf = F.col("_n").cast("double")
-    r0 = cells.agg(
-        F.sum(F.round(F.col("_y") * nf * nano, 0).cast("long")).alias(
-            "_sy"
-        ),
-        F.sum("_n").alias("_nn"),
-    ).collect()[0]
-    theta = [round(r0["_sy"] / 1e9 / r0["_nn"], 9)] + [0.0] * p + [0.0]
-
-    info = None
-    for _ in range(iters):
-        sigma = float(np.exp(theta[-1]))
-        eta = F.lit(theta[0])
-        for j in range(p):
-            eta = eta + F.lit(theta[j + 1]) * F.col(f"_x{j}")
-        z = (F.col("_y") - eta) / F.lit(sigma)
-        zc = F.least(F.greatest(z, F.lit(-30.0)), F.lit(30.0))
-        s = F.lit(1.0) / (F.lit(1.0) + F.exp(-zc))
-        dlt = F.col("_d").cast("double")
-        gz = dlt - s * (F.lit(1.0) + dlt)
-        gzp = -s * (F.lit(1.0) - s) * (F.lit(1.0) + dlt)
-        xs = [F.lit(1.0)] + [F.col(f"_x{j}") for j in range(p)]
-
-        def tsum(expr, alias):
-            return F.sum(
-                F.round(expr * nf * nano, 0).cast("long")
-            ).alias(alias)
-
-        aggs = []
-        for j in range(p + 1):
-            aggs.append(tsum(-gz * xs[j] / F.lit(sigma), f"g{j}"))
-        aggs.append(tsum(-z * gz - dlt, f"g{q - 1}"))
-        for j in range(p + 1):
-            for k in range(j, p + 1):
-                aggs.append(
-                    tsum(
-                        gzp * xs[j] * xs[k] / F.lit(sigma * sigma),
-                        f"h{j}_{k}",
-                    )
-                )
-        for j in range(p + 1):
-            aggs.append(
-                tsum(
-                    xs[j] * (z * gzp + gz) / F.lit(sigma),
-                    f"h{j}_{q - 1}",
-                )
-            )
-        aggs.append(tsum(z * z * gzp + z * gz, f"h{q - 1}_{q - 1}"))
-        row = cells.agg(*aggs).collect()[0]
-        g = np.array([row[f"g{j}"] / 1e9 for j in range(q)])
-        hess = np.zeros((q, q))
-        for j in range(q):
-            for k in range(j, q):
-                hess[j, k] = hess[k, j] = row[f"h{j}_{k}"] / 1e9
-        info = -hess
-        step = np.clip(np.linalg.solve(info, g), -1.0, 1.0)
-        theta = [round(t + st, 9) for t, st in zip(theta, step)]
-
-    beta = theta[:-1]
-    sigma = round(float(np.exp(theta[-1])), 9)
-    if return_se:
-        cov = np.linalg.inv(info)
-        se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(q)]
-        return beta, sigma, se
-    return beta, sigma
 
 
 def apc_drift_model(
@@ -11771,7 +11616,7 @@ def apc_drift_model(
     (deterministic; keeps the intercept a real rate).
 
     Fit is ``glm_poisson`` on the CELL frame (age dummies, first
-    band reference, offset ln Y) — one nano-lattice aggregate per
+    band reference, offset ln Y) — one nano-lattice fold per
     Fisher pass over a grid-bounded frame; the age-level collect is
     #bands rows (``max_ages`` guard). Default 12 Fisher passes: the
     flat β=0 start sits far below registry-sized cell means (e^η

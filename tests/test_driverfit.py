@@ -8,6 +8,8 @@ of every returned number."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,19 @@ import cancer_survival_etl_spark.llm.inference as inf
 import cancer_survival_etl_spark.operators.graph as gr
 import cancer_survival_etl_spark.operators.stats as st
 import cancer_survival_etl_spark.operators.survival as sv
+
+
+@contextmanager
+def _arrow_batches(spark, n):
+    """Cap every Arrow batch at ``n`` records, so a ``driverfit.fold``
+    over the cells runs its kernel on many batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def _cox_cohort(spark):
@@ -77,6 +92,20 @@ def test_glm_driver_paths_bit_equal(spark, distributed):
     assert slow_p == fast_p
     assert slow_o == fast_o
     assert slow_l == fast_l
+    # 1 batch == k batches: the fold's integer partials are associative
+    # (two iterations: every tiny Arrow batch costs a pandas frame)
+    one_o = st.glm_poisson(
+        d, ["x"], "y", offset_col="lny", iters=2, return_se=True
+    )
+    one_l = st.glm_logistic(d, ["x"], "yb", iters=2, return_se=True)
+    dk = d.repartition(5)
+    with distributed(), _arrow_batches(spark, 7):
+        k_o = st.glm_poisson(
+            dk, ["x"], "y", offset_col="lny", iters=2, return_se=True
+        )
+        k_l = st.glm_logistic(dk, ["x"], "yb", iters=2, return_se=True)
+    assert k_o == one_o
+    assert k_l == one_l
 
 
 def _fg_cohort(spark):
@@ -472,6 +501,16 @@ def test_aft_driver_paths_bit_equal(spark, distributed):
         slow_l = sv.loglogistic_aft(d, ["x"], iters=6, return_se=True)
     assert slow_w == fast_w
     assert slow_l == fast_l
+    # 1 batch == k batches: the fold's integer partials are associative
+    # (two iterations: every tiny Arrow batch costs a pandas frame)
+    one_w = sv.weibull_aft(d, ["x"], iters=2, return_se=True)
+    one_l = sv.loglogistic_aft(d, ["x"], iters=2, return_se=True)
+    dk = d.repartition(5)
+    with distributed(), _arrow_batches(spark, 7):
+        k_w = sv.weibull_aft(dk, ["x"], iters=2, return_se=True)
+        k_l = sv.loglogistic_aft(dk, ["x"], iters=2, return_se=True)
+    assert k_w == one_w
+    assert k_l == one_l
 
 
 def _td_episodes(spark):
@@ -634,6 +673,7 @@ _EMPTY_FITS = {
     "cox_ph": lambda d: sv.cox_ph(d, ["x"], iters=2),
     "fine_gray": lambda d: sv.fine_gray(d, ["x"], iters=2),
     "weibull_aft": lambda d: sv.weibull_aft(d, ["x"], iters=2),
+    "loglogistic_aft": lambda d: sv.loglogistic_aft(d, ["x"], iters=2),
     "glm_poisson": lambda d: st.glm_poisson(d, ["x"], "y", iters=2),
     "glm_logistic": lambda d: st.glm_logistic(d, ["x"], "event", iters=2),
     "logistic_train": lambda d: inf.logistic_train(
@@ -661,6 +701,30 @@ def test_empty_cohort_named_error(spark, distributed, fit, path):
         else:
             with distributed():
                 _EMPTY_FITS[fit](d)
+
+
+_OVERFLOW_FITS = {
+    "glm_poisson": lambda d: st.glm_poisson(d, ["x"], "y", iters=2),
+    "weibull_aft": lambda d: sv.weibull_aft(d, ["x"], iters=2),
+}
+
+
+@pytest.mark.parametrize("fit", sorted(_OVERFLOW_FITS))
+def test_lattice_overflow_named_error(spark, distributed, fit):
+    # x ≈ 1e5 puts x²·1e9 past int64: both paths must name the fit,
+    # never wrap the sum into a silently wrong number
+    d = spark.range(2000).select(
+        (1e5 + F.col("id") % 7).alias("x"),
+        (F.col("id") % 6).cast("double").alias("y"),
+        ((F.col("id") % 9) + 1).cast("double").alias("duration"),
+        (F.col("id") % 4 > 0).cast("int").alias("event"),
+    )
+    with pytest.raises(ValueError, match=f"^{fit}: lattice overflow"):
+        _OVERFLOW_FITS[fit](d)
+    with distributed(), pytest.raises(
+        ValueError, match=f"^{fit}: lattice overflow"
+    ):
+        _OVERFLOW_FITS[fit](d)
 
 
 def _screen_cohort(spark):
@@ -704,6 +768,12 @@ _SCREEN_FITS = {
         lambda d: sv.weibull_aft(d, ["x", "gx"], iters=1, return_se=True),
         ("x", "event", "gx"),
     ),
+    "loglogistic_aft": (
+        lambda d: sv.loglogistic_aft(
+            d, ["x", "gx"], iters=1, return_se=True
+        ),
+        ("x", "event", "gx"),
+    ),
     "gray_test": (
         lambda d: sv.gray_test(d, "grp").collect(),
         ("duration", "cause", "grp"),
@@ -741,6 +811,11 @@ _SCREEN_FITS = {
         ("x", "event", "gx"),
     ),
 }
+# fits on complete cases (R's na.omit): the null rows leave every
+# moment, so the fit equals the fit on the dropna'd frame
+_COMPLETE_CASE_FITS = {
+    "weibull_aft", "loglogistic_aft", "glm_logistic", "glm_poisson",
+}
 
 
 @pytest.mark.parametrize("case", [0, 1, 2], ids=["feature", "event", "group"])
@@ -749,24 +824,28 @@ def test_null_screens_driver_equals_distributed(
     spark, distributed, fit, case
 ):
     # a null in a screened column sends the fit down its distributed
-    # path, so both runs must agree exactly — on the result, or on the
-    # named error (gray_test counts a null group as a third group)
+    # path (or out of a complete-case fit), so both runs must agree
+    # exactly — on the result, or on the named error (gray_test counts
+    # a null group as a third group)
     run, cols = _SCREEN_FITS[fit]
     col = cols[case]
     d = _screen_cohort(spark).withColumn(
         col, F.when(F.col("id") % 11 == 0, None).otherwise(F.col(col))
     )
 
-    def outcome():
+    def outcome(frame):
         try:
-            return run(d)
+            return run(frame)
         except ValueError as e:
             return repr(e)
 
-    fast = outcome()
+    fast = outcome(d)
     with distributed():
-        slow = outcome()
+        slow = outcome(d)
     assert fast == slow, (fit, col, fast, slow)
+    if fit in _COMPLETE_CASE_FITS:
+        cc = outcome(d.dropna(subset=[col]))
+        assert fast == cc, (fit, col, fast, cc)
 
 
 def test_only_driverfit_owns_the_bounded_collect():
