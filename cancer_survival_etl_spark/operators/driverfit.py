@@ -21,9 +21,21 @@ the collected frame, or over every Arrow batch of ``src`` through
 ``mapInPandas``, and adds the partials on the driver as Python ints.
 Integer addition is associative, so a fit that computes its moments
 this way (the AFT and GLM cores) returns the same bits under any
-partitioning or batch split. The fits that still keep a hand-written
-numpy twin beside a Spark-expression loop compute on the IDENTICAL
-nano/pico lattice, so their two paths agree bit for bit too (pinned in
+partitioning or batch split.
+
+One key-ordered runner: ``scan(src, pdf, totals, step)`` runs a kernel
+whose sums are suffixes within a stratum along a key order (the Cox
+risk sets). On the collected frame it is one ``step`` call with zero
+carries. Otherwise ``src`` is pinned once by ``ranged`` —
+range-partitioned on (strata…, key), so partitions follow the key
+order — and each pass is two ``mapInPandas`` jobs: per-(partition,
+stratum) ``totals``, then ``step`` on each partition given its carry,
+the exact Σ of the later partitions' totals for the same stratum
+(strata are matched across partitions by ``stratum_codes`` labels).
+``cox_ph``, ``cox_ph_time_dependent`` and ``cox_ph_counting`` share
+one such kernel. The fits that still keep a hand-written numpy twin
+beside a Spark-expression loop compute on the IDENTICAL nano/pico
+lattice, so their two paths agree bit for bit too (pinned in
 tests/test_driverfit.py).
 
 One test switch: ``MAX_DRIVER_CELLS`` bounds every driver collect and is
@@ -112,14 +124,13 @@ def collect_cells(df: DataFrame, key_cols, float_cols=(), notnull_cols=()):
     return collect_bounded(cells, float_cols, notnull_cols)
 
 
-def exact_sum(fit, x, w=None):
-    """Σ round_half_up(x)[·w] as an exact Python int: each cell's term
-    is rounded to an int64 lattice point (times the int64 count ``w``,
-    when given) and the sum never wraps. A non-finite term or one
-    outside int64 raises ``ValueError("<fit>: lattice overflow")``.
-    The sum runs in int64 while a float64 bound on Σ|term| proves it
-    fits, else in Python ints — so the outcome is the same for any
-    split of the cells into batches."""
+def exact_terms(fit, x, w=None, headroom=0.0):
+    """round_half_up(x)[·w] per cell as an integer array whose sums —
+    any grouped, prefix or suffix sum, plus up to ``headroom`` more —
+    are exact: int64 while a float64 bound on Σ|term| + headroom proves
+    no such sum can wrap, else Python ints (object dtype). A non-finite
+    term or one outside int64 raises
+    ``ValueError("<fit>: lattice overflow")``."""
     import numpy as np
 
     r = round_half_up(x)
@@ -127,11 +138,87 @@ def exact_sum(fit, x, w=None):
     if not (a < 2.0**63).all():  # NaN fails the comparison too
         raise ValueError(f"{fit}: lattice overflow")
     r = r.astype(np.int64)
-    if (a.sum() if w is None else (a * w).sum()) < 2.0**62:
-        return int(r.sum() if w is None else (r * w).sum())
-    if w is None:
-        return sum(r.tolist())
-    return sum(v * n for v, n in zip(r.tolist(), w.tolist()))
+    if w is not None:
+        a = a * np.abs(w)
+    if a.sum() + headroom >= 2.0**62:
+        r = r.astype(object)
+        w = None if w is None else w.astype(object)
+    return r if w is None else r * w
+
+
+def exact_sum(fit, x, w=None):
+    """Σ round_half_up(x)[·w] as an exact Python int (``exact_terms``):
+    the sum never wraps, so the outcome is the same for any split of
+    the cells into batches."""
+    return int(exact_terms(fit, x, w).sum())
+
+
+def stratum_codes(b, cols):
+    """Code each row of the cell batch ``b`` by its stratum — its
+    values of ``cols``, a null being a stratum of its own — and label
+    every code with a string that is the same in every batch (a long
+    column with nulls arrives as float64 in one batch and int64 in
+    another). Returns (codes, labels)."""
+    import numpy as np
+    import pandas as pd
+
+    if not cols:
+        return np.zeros(len(b), dtype=np.int64), [""]
+    codes = (
+        b.groupby(list(cols), sort=True, dropna=False).ngroup().to_numpy()
+    )
+
+    def canon(v):
+        if pd.isna(v):
+            return None
+        if isinstance(v, float) and v.is_integer():
+            return int(v)
+        return v.item() if isinstance(v, np.generic) else v
+
+    first = np.unique(codes, return_index=True)[1]
+    labels = [
+        repr(tuple(map(canon, row)))
+        for row in b[list(cols)].iloc[first].itertuples(index=False)
+    ]
+    return codes, labels
+
+
+def _partials(src: DataFrame, fn, whole=False):
+    """Run ``fn(pid, batch)`` — a list of (label, [Python ints]) out —
+    on every Arrow batch of ``src`` through ``mapInPandas`` (ONE job),
+    or with ``whole`` on each partition's batches concatenated, and
+    collect the rows as (partition id, label, [ints]). The ints travel
+    as decimal text because a batch sum can exceed int64; a
+    ``ValueError`` raised in a worker is raised again on the driver."""
+
+    def run(batches):
+        import pandas as pd
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        if whole:
+            batches = list(batches)
+            batches = [pd.concat(batches)] if batches else []
+        for b in batches:
+            if len(b):
+                try:
+                    rows = [
+                        (k, " ".join(map(str, v))) for k, v in fn(pid, b)
+                    ]
+                except ValueError as e:  # a named error, for the driver
+                    rows = [("", f"!{e}")]
+                yield pd.DataFrame({
+                    "_pid": [pid] * len(rows),
+                    "_k": [k for k, _ in rows],
+                    "_m": [m for _, m in rows],
+                })
+
+    out = []
+    for r in src.mapInPandas(run, "_pid int, _k string, _m string").collect():
+        if r["_m"].startswith("!"):
+            raise ValueError(r["_m"][1:])
+        out.append((r["_pid"], r["_k"], [int(v) for v in r["_m"].split()]))
+    return out
 
 
 def fold(src: DataFrame, pdf, kernel):
@@ -139,28 +226,52 @@ def fold(src: DataFrame, pdf, kernel):
     partial sums out — over every cell and return the element-wise
     totals as Python ints, or ``[]`` when there are no cells. With
     ``pdf`` (what ``collect_bounded`` returned) it is one call on the
-    driver; otherwise it runs on each Arrow batch of ``src`` through
-    ``mapInPandas`` — ONE job, one small row per batch — and the driver
-    adds the rows. The partials travel as decimal text because a batch
-    sum can exceed int64; a ``ValueError`` the kernel raises in a
-    worker is raised again on the driver."""
+    driver; otherwise it runs on each Arrow batch of ``src`` — ONE
+    ``mapInPandas`` job, one small row per batch — and the driver adds
+    the rows."""
     if pdf is not None:
         return kernel(pdf) if len(pdf) else []
+    parts = _partials(src, lambda pid, b: [("", kernel(b))])
+    return [sum(c) for c in zip(*(m for _, _, m in parts))]
 
-    def run(batches):
-        import pandas as pd
 
-        for b in batches:
-            if len(b):
-                try:
-                    m = " ".join(map(str, kernel(b)))
-                except ValueError as e:  # a named error, for the driver
-                    m = f"!{e}"
-                yield pd.DataFrame({"_m": [m]})
+def ranged(df: DataFrame, keys):
+    """Pin ``df`` range-partitioned on ``keys`` into defaultParallelism
+    partitions (the ``global_prefix_sum`` layout): equal keys share a
+    partition and partition ids follow the key order — the ``src`` of
+    ``scan``. Lazy: the first job materializes it."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartitionByRange(n, *keys).localCheckpoint(eager=False)
 
-    parts = []
-    for r in src.mapInPandas(run, "_m string").collect():
-        if r["_m"].startswith("!"):
-            raise ValueError(r["_m"][1:])
-        parts.append([int(v) for v in r["_m"].split()])
-    return [sum(c) for c in zip(*parts)]
+
+def scan(src: DataFrame, pdf, totals, step):
+    """Run a key-ordered kernel — a suffix scan within each stratum, such
+    as the Cox risk sets — over every cell and return the element-wise
+    totals of its exact Python-int partials, or ``[]`` when there are
+    no cells. ``totals(b)`` maps a cell batch to {stratum label:
+    [ints]}; ``step(b, carry)`` returns the batch's partials, where
+    ``carry`` maps a label to the totals of that stratum's cells LATER
+    in the key order than the batch's.
+
+    With ``pdf`` it is one ``step(pdf, {})`` call on the driver: zero
+    carries, zero jobs. Otherwise ``src`` comes from ``ranged`` and
+    each partition is one batch: a ``mapInPandas`` job of ``totals``,
+    the carries (per partition and stratum, the Σ of the later
+    partitions' totals) added on the driver as Python ints, then a
+    ``mapInPandas`` job of ``step`` — two jobs."""
+    if pdf is not None:
+        return step(pdf, {}) if len(pdf) else []
+    tots = _partials(src, lambda pid, b: totals(b).items(), whole=True)
+    if not tots:
+        return []
+    carry = {}  # pid -> {label: [ints]}
+    later = {}  # label -> Σ over the partitions already passed
+    for pid, k, m in sorted(tots, key=lambda r: -r[0]):
+        if k in later:
+            carry.setdefault(pid, {})[k] = later[k]
+            m = [a + c for a, c in zip(m, later[k])]
+        later[k] = m
+    parts = _partials(
+        src, lambda pid, b: [("", step(b, carry.get(pid, {})))], whole=True
+    )
+    return [sum(c) for c in zip(*(m for _, _, m in parts))]

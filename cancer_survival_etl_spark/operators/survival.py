@@ -43,8 +43,12 @@ from .driverfit import (
     collect_bounded,
     collect_cells,
     exact_sum,
+    exact_terms,
     fold,
+    ranged,
     round_half_up,
+    scan,
+    stratum_codes,
 )
 from .windows import global_prefix_sum, grouped_prefix_sum
 
@@ -2415,161 +2419,198 @@ def flexible_excess_hazard_fit(
     return [float(t) for t in theta[:-1]], float(theta[-1])
 
 
-def _cox_cell_arrays(cells, p, n_strat):
-    """Sort collected (strata..., x-pattern, duration, event, _w)
-    cells into the (stratum, duration) total order the risk-set scans
-    need and precompute the group/stratum segmentation. Shared by the
-    cox/Fine-Gray driver twins."""
+def _cox_fit(
+    fit, df, feature_cols, time_cols, event_col, iters, ties, strata_cols,
+    return_se,
+):
+    """The Newton fit shared by ``cox_ph``, ``cox_ph_time_dependent``
+    and ``cox_ph_counting``: the counting-process partial likelihood,
+    ``cox_ph`` being the case with every start at −∞.
+
+    ``time_cols`` is (duration,) or (start, stop). Complete cases only
+    (R's ``na.omit``): rows with a null/NaN feature, time or event are
+    dropped; a null stratum stays a stratum of its own. Each episode
+    then becomes signed rows — an exit at stop (sign +1, carrying the
+    event) and, with a start, an entry at start (sign −1, no event) —
+    that collapse ONCE to (strata…, x-pattern, time, sign, event, ``_w``)
+    cells. The risk set at t is the suffix Σ_{time ≥ t} sign·mass within
+    the stratum, i.e. Σ_{stop ≥ t} − Σ_{start ≥ t}: the episodes with
+    start < t ≤ stop.
+
+    One kernel computes each (stratum, time) key's exact moments — d_t,
+    s_t = Σ event·x, the signed risk moments A0 = Σ e^{xβ}, A1_j =
+    Σ x_j e^{xβ}, A2_jk = Σ x_j x_k e^{xβ} and, for Efron, the event
+    moments E0/E1/E2 — each per-cell term rounded to the 1e-9 lattice
+    and summed exactly (``driverfit.exact_terms``: int64 while a bound
+    proves it fits, else Python ints). One step turns the suffix sums
+    into the gradient and information, nano-rounded and summed exactly.
+    ``driverfit.scan`` runs both: on the driver when the cells are
+    bounded, else over range partitions with per-stratum carries, so β̂
+    is bit-identical under any partitioning. A term outside int64
+    raises ``"<fit>: lattice overflow"``."""
     import numpy as np
 
-    w = cells["_w"].to_numpy().astype(np.int64)
-    d = cells["_d"].to_numpy().astype(np.int64)
-    t = cells["_t"].to_numpy().astype(np.float64)
-    xs = [
-        cells[f"_x{j}"].to_numpy().astype(np.float64) for j in range(p)
-    ]
-    if n_strat:
-        scode = (
-            cells.groupby(
-                [f"_g{i}" for i in range(n_strat)],
-                sort=True,
-                dropna=False,
-            )
-            .ngroup()
-            .to_numpy()
+    if ties not in ("breslow", "efron"):
+        raise ValueError(f"ties must be 'breslow' or 'efron', got {ties!r}")
+    iters = int(iters)
+    if iters < 1:
+        raise ValueError(f"{fit}: iters must be >= 1")
+    feats = list(feature_cols)
+    p = len(feats)
+    strata = list(strata_cols) if strata_cols else []
+    gcols = [f"_g{i}" for i in range(len(strata))]
+    ev = F.col(event_col).cast("long")
+    stop = F.col(time_cols[-1]).cast("double")
+    if len(time_cols) == 2:
+        start = F.col(time_cols[0]).cast("double")
+        stop = F.when(
+            start >= stop,
+            F.raise_error(F.lit(
+                f"{fit}: episode with start >= stop (episodes need "
+                "start < stop)"
+            )).cast("double"),
+        ).otherwise(stop)
+    # exit rows carry the event; entry rows subtract the episode's
+    # mass from the risk sets at and before its start
+    rows = [F.struct(stop.alias("_t"), F.lit(1).alias("_s"), ev.alias("_d"))]
+    if len(time_cols) == 2:
+        rows.append(F.struct(
+            start.alias("_t"),
+            F.lit(-1).alias("_s"),
+            F.lit(0).cast("long").alias("_d"),
+        ))
+    keys = [*gcols, *[f"_x{j}" for j in range(p)], "_t", "_s", "_d"]
+    cells = (
+        df.dropna(subset=[*feats, *time_cols, event_col])
+        .select(
+            *[F.col(c).alias(g) for c, g in zip(strata, gcols)],
+            *[
+                F.col(c).cast("double").alias(f"_x{j}")
+                for j, c in enumerate(feats)
+            ],
+            F.inline(F.array(*rows)),
         )
-    else:
-        scode = np.zeros(len(cells), dtype=np.int64)
-    order = np.lexsort((t, scode))
-    w, d, t, scode = w[order], d[order], t[order], scode[order]
-    xs = [x[order] for x in xs]
-    new_g = np.ones(len(t), dtype=bool)
-    if len(t) > 1:
-        new_g[1:] = (t[1:] != t[:-1]) | (scode[1:] != scode[:-1])
-    gstarts = np.flatnonzero(new_g)
-    g_s = scode[gstarts]
-    new_s = np.ones(len(gstarts), dtype=bool)
-    if len(gstarts) > 1:
-        new_s[1:] = g_s[1:] != g_s[:-1]
-    sstarts = np.flatnonzero(new_s)
-    seg_len = np.diff(np.append(sstarts, len(gstarts)))
-
-    def by_group(v):
-        # exact int64 per-(stratum, duration) sums
-        return np.add.reduceat(v, gstarts)
-
-    def suffix(gv):
-        # per-stratum total − exclusive prefix, exact int64 — the
-        # grouped_prefix_sum twin
-        pre = np.cumsum(gv)
-        pre = np.concatenate(([np.int64(0)], pre[:-1]))
-        pre = pre - np.repeat(pre[sstarts], seg_len)
-        tot = np.repeat(np.add.reduceat(gv, sstarts), seg_len)
-        return tot - pre
-
-    return w, d, t, xs, gstarts, by_group, suffix
-
-
-def _cox_driver_fit(cells, p, n_strat, iters, ties):
-    """numpy twin of the ``cox_ph`` Newton loop over collected cells —
-    transliterated term-for-term from the distributed fold (same
-    literal-β fold order, same per-subject nano roundings scaled by
-    the cell count, same exact long-lattice sums, same float op
-    order in the gradient/information terms), so β̂ and the
-    information matrix are bit-identical to the distributed loop
-    (pinned in tests/test_survival.py). Returns (beta, info)."""
-    import numpy as np
-
-    w, d, t, xs, gstarts, by_group, suffix = _cox_cell_arrays(
-        cells, p, n_strat
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_w"))
+        .localCheckpoint(eager=False)
     )
-    nano = 1e9
-    beta = [0.0] * p
-    info = None
-    for _ in range(iters):
+    pdf = collect_bounded(cells)
+    src = None if pdf is not None else ranged(cells, [*gcols, "_t"])
+    upper = [(j, k) for j in range(p) for k in range(j, p)]
+    efron = ties == "efron"
+
+    def moments(beta, b, carry):
+        """per-(stratum, time) key moments of the cell batch ``b``,
+        keys in (stratum, time) order; the risk moments are the exact
+        suffix sums within each stratum plus its ``carry``."""
+        codes, labels = stratum_codes(b, gcols)
+        t = b["_t"].to_numpy().astype(np.float64)
+        o = np.lexsort((t, codes))
+        t, codes = t[o], codes[o]
+        w = b["_w"].to_numpy().astype(np.int64)[o]
+        mass = b["_s"].to_numpy().astype(np.int64)[o] * w
+        dw = b["_d"].to_numpy().astype(np.int64)[o] * w
+        xs = [
+            b[f"_x{j}"].to_numpy().astype(np.float64)[o] for j in range(p)
+        ]
+        new = np.ones(len(t), dtype=bool)
+        new[1:] = (t[1:] != t[:-1]) | (codes[1:] != codes[:-1])
+        kstarts = np.flatnonzero(new)
+        kcode = codes[kstarts]
+        snew = np.ones(len(kstarts), dtype=bool)
+        snew[1:] = kcode[1:] != kcode[:-1]
+        sstarts = np.flatnonzero(snew)
+        slen = np.diff(np.append(sstarts, len(kstarts)))
+        slabels = [labels[c] for c in kcode[sstarts]]
+
         xb = np.zeros(len(t))
         for j in range(p):
             xb = xb + beta[j] * xs[j]
         r = np.exp(xb)
-        a0 = round_half_up(r * nano).astype(np.int64) * w
-        a1 = [
-            round_half_up(r * xs[j] * nano).astype(np.int64) * w
-            for j in range(p)
+        lat = (
+            [r * 1e9]
+            + [r * xs[j] * 1e9 for j in range(p)]
+            + [r * xs[j] * xs[k] * 1e9 for j, k in upper]
+        )
+
+        def by_key(v):
+            return np.add.reduceat(v, kstarts)
+
+        risk = []
+        for i, v in enumerate(lat):
+            c = [carry[k][i] if k in carry else 0 for k in slabels]
+            a = exact_terms(fit, v, mass, max(map(abs, c)))
+            # inclusive suffix within each stratum, plus its carry
+            sfx = np.cumsum(by_key(a)[::-1])[::-1]
+            nxt = np.append(sfx[sstarts[1:]], 0) - np.array(c, sfx.dtype)
+            risk.append(sfx - np.repeat(nxt, slen))
+        d = by_key(dw)
+        s = [
+            by_key(exact_terms(fit, xs[j] * 1e9, dw)) for j in range(p)
         ]
-        a2 = {
-            (j, k): round_half_up(r * xs[j] * xs[k] * nano).astype(np.int64)
-            * w
-            for j in range(p)
-            for k in range(j, p)
+        e = [by_key(exact_terms(fit, v, dw)) for v in lat] if efron else []
+        return sstarts, slabels, d, s, risk, e
+
+    def totals(beta, b):
+        sstarts, slabels, _, _, risk, _ = moments(beta, b, {})
+        # a stratum's total is its first key's suffix
+        return {
+            k: [int(v[i]) for v in risk] for k, i in zip(slabels, sstarts)
         }
-        s_ = [
-            d * round_half_up(xs[j] * nano).astype(np.int64) * w
-            for j in range(p)
-        ]
-        d_g = by_group(d * w)
-        s_g = [by_group(v).astype(np.float64) for v in s_]
-        s0 = suffix(by_group(a0)).astype(np.float64)
-        s1 = [suffix(by_group(v)).astype(np.float64) for v in a1]
-        s2 = {
-            jk: suffix(by_group(v)).astype(np.float64)
-            for jk, v in a2.items()
-        }
-        ev = d_g > 0
-        gsum = np.zeros(p)
-        isum = np.zeros((p, p))
-        if ties == "efron":
-            e0 = by_group(d * a0).astype(np.float64)
-            e1 = [by_group(d * v).astype(np.float64) for v in a1]
-            e2 = {
-                jk: by_group(d * v).astype(np.float64)
-                for jk, v in a2.items()
-            }
-            idx = np.flatnonzero(ev)
-            reps = d_g[idx]
-            rowg = np.repeat(idx, reps)
-            el = np.concatenate(
-                [np.arange(k, dtype=np.int64) for k in reps]
-            ) if len(reps) else np.zeros(0, dtype=np.int64)
-            dt = d_g[rowg].astype(np.float64)
+
+    def partials(beta, b, carry):
+        _, _, d, s, risk, e = moments(beta, b, carry)
+        ev = np.flatnonzero(d > 0)
+        reps = d[ev]
+        d = reps.astype(np.float64)
+        s = [v[ev].astype(np.float64) for v in s]
+        s0, *rest = [v[ev].astype(np.float64) for v in risk]
+        s1, s2 = rest[:p], dict(zip(upper, rest[p:]))
+        if efron:
+            # one row per (event key, l), l = 0..d−1, each seeing the
+            # risk mass shrunk by l/d of the tied events' own moments
+            e0, *erest = [v[ev].astype(np.float64) for v in e]
+            e1, e2 = erest[:p], dict(zip(upper, erest[p:]))
+            rowg = np.repeat(np.arange(len(reps)), reps)
+            el = np.arange(len(rowg)) - np.repeat(np.cumsum(reps) - reps,
+                                                  reps)
+            dt = d[rowg]
             frac = el.astype(np.float64) / dt
             s0l = s0[rowg] - frac * e0[rowg]
             shr1 = [s1[j][rowg] - frac * e1[j][rowg] for j in range(p)]
-            for j in range(p):
-                term = s_g[j][rowg] / nano / dt - shr1[j] / s0l
-                gsum[j] = (
-                    round_half_up(term * nano).astype(np.int64).sum() / 1e9
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    s2l = s2[(j, k)][rowg] - frac * e2[(j, k)][rowg]
-                    term = s2l / s0l - (shr1[j] / s0l) * (
-                        shr1[k] / s0l
-                    )
-                    isum[j, k] = isum[k, j] = (
-                        round_half_up(term * nano).astype(np.int64).sum()
-                        / 1e9
-                    )
+            grad = [
+                s[j][rowg] / 1e9 / dt - shr1[j] / s0l for j in range(p)
+            ]
+            hess = [
+                (s2[jk][rowg] - frac * e2[jk][rowg]) / s0l
+                - (shr1[jk[0]] / s0l) * (shr1[jk[1]] / s0l)
+                for jk in upper
+            ]
         else:
-            dt = d_g.astype(np.float64)
-            for j in range(p):
-                term = s_g[j] / nano - dt * (s1[j] / s0)
-                gsum[j] = (
-                    round_half_up(term[ev] * nano).astype(np.int64).sum()
-                    / 1e9
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    term = dt * (
-                        s2[(j, k)] / s0 - (s1[j] / s0) * (s1[k] / s0)
-                    )
-                    isum[j, k] = isum[k, j] = (
-                        round_half_up(term[ev] * nano).astype(np.int64).sum()
-                        / 1e9
-                    )
-        info = isum
-        step = np.linalg.solve(info, gsum)
+            grad = [s[j] / 1e9 - d * (s1[j] / s0) for j in range(p)]
+            hess = [
+                d * (s2[(j, k)] / s0 - (s1[j] / s0) * (s1[k] / s0))
+                for j, k in upper
+            ]
+        return [exact_sum(fit, v * 1e9) for v in grad + hess]
+
+    beta = [0.0] * p
+    info = None
+    for _ in range(iters):
+        tot = scan(src, pdf, partial(totals, beta), partial(partials, beta))
+        if not tot:
+            raise ValueError(f"{fit}: empty input")
+        g = np.array([v / 1e9 for v in tot[:p]])
+        info = np.zeros((p, p))
+        for (j, k), v in zip(upper, tot[p:]):
+            info[j, k] = info[k, j] = v / 1e9
+        step = np.linalg.solve(info, g)
         beta = [round(b + s, 9) for b, s in zip(beta, step)]
-    return beta, info
+    if return_se:
+        cov = np.linalg.inv(info)
+        se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(p)]
+        return beta, se
+    return beta
 
 
 def cox_ph(
@@ -2589,18 +2630,17 @@ def cox_ph(
     "efron" (R ``coxph``'s default — within a d-way tie the l-th
     event sees the risk mass shrunk by l/d of the tied events' own
     mass: S·_t − (l/d)·D·_t, where D are the moments of the event
-    subjects at t). Efron costs one ``explode(sequence(0, d_t−1))``
-    over the EVENT cells only — Σd_t extra rows, bounded by the event
-    count, fully distributed — and is exactly equal to Breslow when
-    no two events share a duration (pinned in tests).
+    subjects at t). Efron expands each event time into d_t terms —
+    Σd_t in all, bounded by the event count — and is exactly equal to
+    Breslow when no two events share a duration (pinned in tests).
 
     ``strata_cols``: STRATIFIED Cox — each stratum keeps its own
     (unmodelled) baseline hazard and risk sets form within strata,
     while β is shared: the registry adjustment for center/region/age
     band when proportionality across the stratifier is implausible.
     Cells become per-(stratum, duration); the risk-set suffix sums
-    run per stratum via ``grouped_prefix_sum`` (a hot stratum spans
-    range partitions); the gradient/information pooling is unchanged
+    run per stratum (a hot stratum spans range partitions, joined by
+    carries); the gradient/information pooling is unchanged
     because the stratified partial likelihood is a plain sum of
     per-stratum terms.
 
@@ -2611,248 +2651,41 @@ def cox_ph(
     this run reaches, it matches the at-convergence information far
     below the rounding — zero extra passes.)
 
-    Each iteration is two bounded passes, nothing iterative ever
-    runs per-row on the driver:
-
-      1. collapse subjects to per-duration cells carrying the event
-         count d_t, the event-feature sums s_t, and the risk-mass
-         moments A0 = Σ exp(xβ), A1_j = Σ x_j exp(xβ),
-         A2_jk = Σ x_j x_k exp(xβ) of subjects LEAVING at t — every
-         moment rounded per subject onto the 1e-9 nano-lattice and
-         summed as exact longs (one hash aggregate, map-side
-         combined);
-      2. risk-set suffix sums S·_t = totals − exclusive prefix via
-         ONE multi-column ``global_prefix_sum`` over the duration
-         axis (the cell table is #distinct durations — bounded by
-         cohort size), then per-event-time gradient/information
-         contributions, themselves nano-rounded and summed exactly
-         into p + p(p+1)/2 scalars.
+    Complete cases only (R's ``na.omit``): rows with a null/NaN
+    feature, duration or event are dropped; a null stratum is a
+    stratum of its own. Subjects collapse ONCE to (strata, x-pattern,
+    duration, event) cells with counts. Each iteration computes, per
+    (stratum, duration) key, the event count d_t, the event-feature
+    sums s_t and the risk-mass moments A0 = Σ exp(xβ), A1_j =
+    Σ x_j exp(xβ), A2_jk = Σ x_j x_k exp(xβ) of subjects LEAVING at t
+    — every moment rounded per cell onto the 1e-9 nano-lattice and
+    summed exactly — then the risk-set suffix sums S·_t (everyone
+    leaving at or after t, within the stratum) and the per-event-time
+    gradient/information contributions, themselves nano-rounded and
+    summed exactly into p + p(p+1)/2 integers (``_cox_fit``, the core
+    shared with ``cox_ph_time_dependent`` and ``cox_ph_counting``).
+    Bounded cells run on the driver; beyond the bound the cells are
+    range-partitioned on (strata, duration) once and each iteration is
+    two Spark jobs, one for per-stratum totals, one for the partials
+    given each partition's carry from later partitions.
 
     The driver holds only β and the p×p information matrix (numpy
     solve, p is small); β is rounded to 9 dp per iteration. Because
-    every distributed sum is an exact integer sum of per-row
-    roundings, the learned coefficients are BIT-IDENTICAL under any
-    partitioning — the same contract as ``llm/inference.py::
-    logistic_train``, pinned in tests at 1 vs 32 partitions.
+    every sum is an exact integer sum of per-cell roundings, the
+    learned coefficients are BIT-IDENTICAL under any partitioning —
+    the same contract as ``llm/inference.py::logistic_train``, pinned
+    in tests at 1 vs k partitions. A term outside int64 raises
+    ``cox_ph: lattice overflow``; an empty cohort ``cox_ph: empty
+    input``.
 
     gradient  g_j = Σ_{t: d_t>0} (s_tj − d_t · S1_tj / S0_t)
     information I_jk = Σ d_t (S2_tjk/S0_t − (S1_tj/S0_t)(S1_tk/S0_t))
     update    β ← β + I⁻¹ g
     """
-    import numpy as np
-
-    if ties not in ("breslow", "efron"):
-        raise ValueError(f"ties must be 'breslow' or 'efron', got {ties!r}")
-    feats = list(feature_cols)
-    p = len(feats)
-    beta = [0.0] * p
-    nano = F.lit(1000000000.0)
-
-    _strata = list(strata_cols) if strata_cols else []
-    _needed = list(
-        dict.fromkeys(_strata + feats + [duration_col, event_col])
+    return _cox_fit(
+        "cox_ph", df, feature_cols, (duration_col,), event_col, iters,
+        ties, strata_cols, return_se,
     )
-    df = df.select(*_needed)
-
-    # r10 driver-solve fast path (driverfit.py): subjects collapse to
-    # (strata, x-pattern, duration, event) cells; when the collapse is
-    # bounded the whole Newton loop runs on the driver over the
-    # collected cells — zero per-iteration Spark jobs. Bit-identical
-    # to the distributed loop below (pinned in tests). Null/NaN
-    # features, durations or events fall back: the distributed fold
-    # null-skips where the numpy twin would garbage-cast.
-    proj = df.select(
-        *[F.col(c).alias(f"_g{i}") for i, c in enumerate(_strata)],
-        *[
-            F.col(c).cast("double").alias(f"_x{j}")
-            for j, c in enumerate(feats)
-        ],
-        F.col(duration_col).cast("double").alias("_t"),
-        F.col(event_col).cast("long").alias("_d"),
-    )
-    pdf = collect_cells(
-        proj,
-        proj.columns,
-        [f"_x{j}" for j in range(p)] + ["_t"],
-        ["_d"],
-    )
-    if pdf is not None:
-        if len(pdf) == 0:
-            raise ValueError("cox_ph: empty input")
-        beta, info = _cox_driver_fit(pdf, p, len(_strata), iters, ties)
-        if return_se:
-            cov = np.linalg.inv(info)
-            se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(p)]
-            return beta, se
-        return beta
-
-    # distributed fallback: pin the NARROW projection once — every
-    # Newton iteration re-derives the upstream plan otherwise (guide §5
-    # caching rule). Lazy: the first iteration's job materializes it.
-    df = df.localCheckpoint(eager=False)
-
-    for _ in range(iters):
-        xb = F.lit(0.0)
-        for j, c in enumerate(feats):
-            xb = xb + F.lit(beta[j]) * F.col(c).cast("double")
-        r = F.exp(xb)
-        ev = F.col(event_col).cast("long")
-        aggs = [
-            F.sum(ev).alias("d_t"),
-            F.sum(F.round(r * nano, 0).cast("long")).alias("a0"),
-        ]
-        for j, c in enumerate(feats):
-            x = F.col(c).cast("double")
-            aggs.append(
-                F.sum(
-                    ev * F.round(x * nano, 0).cast("long")
-                ).alias(f"s{j}")
-            )
-            aggs.append(
-                F.sum(F.round(r * x * nano, 0).cast("long")).alias(f"a1_{j}")
-            )
-        for j in range(p):
-            for k in range(j, p):
-                xj = F.col(feats[j]).cast("double")
-                xk = F.col(feats[k]).cast("double")
-                aggs.append(
-                    F.sum(
-                        F.round(r * xj * xk * nano, 0).cast("long")
-                    ).alias(f"a2_{j}_{k}")
-                )
-        if ties == "efron":
-            # moments of the EVENT subjects at t, on the same
-            # per-subject nano roundings as the risk moments so the
-            # Efron-shrunk denominators stay exactly consistent
-            aggs.append(
-                F.sum(ev * F.round(r * nano, 0).cast("long")).alias("e0")
-            )
-            for j, c in enumerate(feats):
-                x = F.col(c).cast("double")
-                aggs.append(
-                    F.sum(
-                        ev * F.round(r * x * nano, 0).cast("long")
-                    ).alias(f"e1_{j}")
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    xj = F.col(feats[j]).cast("double")
-                    xk = F.col(feats[k]).cast("double")
-                    aggs.append(
-                        F.sum(
-                            ev
-                            * F.round(r * xj * xk * nano, 0).cast("long")
-                        ).alias(f"e2_{j}_{k}")
-                    )
-        strata = list(strata_cols) if strata_cols else []
-        cells = df.groupBy(*strata, duration_col).agg(*aggs)
-
-        vcols = (
-            ["a0"]
-            + [f"a1_{j}" for j in range(p)]
-            + [f"a2_{j}_{k}" for j in range(p) for k in range(j, p)]
-        )
-        # r10: totals ride along with the prefix scan (exact long sums
-        # from the same per-partition totals frame) — the separate
-        # full-pass `tot` aggregation + broadcast join per iteration
-        # is gone (guide §2.4: remove shuffles/passes outright)
-        if strata:
-            pre = grouped_prefix_sum(
-                cells, strata, duration_col, vcols,
-                [f"_pre_{v}" for v in vcols],
-                totals_alias=[f"_tot_{v}" for v in vcols],
-            )
-        else:
-            pre = global_prefix_sum(
-                cells, duration_col, vcols, [f"_pre_{v}" for v in vcols],
-                totals_alias=[f"_tot_{v}" for v in vcols],
-            )
-
-        def suffix(v):
-            # risk set at t = everyone leaving at or after t
-            return F.col(f"_tot_{v}") - F.col(f"_pre_{v}")
-
-        s0 = suffix("a0")
-        d_t = F.col("d_t")
-        out_aggs = []
-        if ties == "efron":
-            # one row per (event time, l) for l = 0..d_t−1: Σd_t rows
-            # total, each seeing the risk mass shrunk by l/d of the
-            # tied events' own moments
-            dd = pre.filter(d_t > 0).withColumn(
-                "_l", F.explode(F.sequence(F.lit(0), d_t - 1))
-            )
-            frac = F.col("_l").cast("double") / d_t
-            s0l = s0 - frac * F.col("e0")
-
-            def shrunk1(j):
-                return suffix(f"a1_{j}") - frac * F.col(f"e1_{j}")
-
-            for j in range(p):
-                term = F.col(f"s{j}") / nano / d_t - shrunk1(j) / s0l
-                out_aggs.append(
-                    F.sum(F.round(term * nano, 0).cast("long")).alias(
-                        f"g{j}"
-                    )
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    s2l = suffix(f"a2_{j}_{k}") - frac * F.col(
-                        f"e2_{j}_{k}"
-                    )
-                    term = (
-                        s2l / s0l
-                        - (shrunk1(j) / s0l) * (shrunk1(k) / s0l)
-                    )
-                    out_aggs.append(
-                        F.sum(
-                            F.round(term * nano, 0).cast("long")
-                        ).alias(f"i{j}_{k}")
-                    )
-            row = dd.agg(*out_aggs).collect()[0]
-        else:
-            for j in range(p):
-                term = (
-                    F.col(f"s{j}") / nano
-                    - d_t * (suffix(f"a1_{j}") / s0)
-                )
-                out_aggs.append(
-                    F.sum(
-                        F.when(
-                            d_t > 0, F.round(term * nano, 0).cast("long")
-                        ).otherwise(F.lit(0).cast("long"))
-                    ).alias(f"g{j}")
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    term = d_t * (
-                        suffix(f"a2_{j}_{k}") / s0
-                        - (suffix(f"a1_{j}") / s0)
-                        * (suffix(f"a1_{k}") / s0)
-                    )
-                    out_aggs.append(
-                        F.sum(
-                            F.when(
-                                d_t > 0,
-                                F.round(term * nano, 0).cast("long"),
-                            ).otherwise(F.lit(0).cast("long"))
-                        ).alias(f"i{j}_{k}")
-                    )
-            row = pre.agg(*out_aggs).collect()[0]
-        if row["g0"] is None:  # no cells: every sum is null
-            raise ValueError("cox_ph: empty input")
-        g = np.array([row[f"g{j}"] / 1e9 for j in range(p)])
-        info = np.zeros((p, p))
-        for j in range(p):
-            for k in range(j, p):
-                info[j, k] = info[k, j] = row[f"i{j}_{k}"] / 1e9
-        step = np.linalg.solve(info, g)
-        beta = [round(b + s, 9) for b, s in zip(beta, step)]
-    if return_se:
-        cov = np.linalg.inv(info)
-        se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(p)]
-        return beta, se
-    return beta
 
 
 def cox_ph_diagnostics(
@@ -5601,162 +5434,6 @@ def aalen_johansen_illness_death(
     )
 
 
-def _cox_td_driver_fit(pdfc, p, iters, ties, return_se):
-    """numpy twin of the ``cox_ph_time_dependent`` Newton loop over
-    collected (x-pattern, start, stop, event) episode cells —
-    transliterated term-for-term from the distributed fold (same
-    per-episode nano roundings scaled by the cell count, same exact
-    long scatter/suffix sums on the merged start/stop axis, same
-    float op order and paren placement in the gradient/information
-    terms, Breslow and Efron), so β̂ and the SEs are bit-identical to
-    the distributed loop (pinned in tests/test_driverfit.py)."""
-    import numpy as np
-
-    wv = pdfc["_w"].to_numpy().astype(np.int64)
-    dv = pdfc["_d"].to_numpy().astype(np.int64)
-    stv = pdfc["_st"].to_numpy().astype(np.float64)
-    spv = pdfc["_sp"].to_numpy().astype(np.float64)
-    if (stv >= spv).any():
-        raise ValueError(
-            "cox_ph_time_dependent: episode with start >= stop"
-        )
-    xv = [
-        pdfc[f"_x{j}"].to_numpy().astype(np.float64) for j in range(p)
-    ]
-    tax = np.unique(np.concatenate([stv, spv]))
-    si = np.searchsorted(tax, stv)
-    xi = np.searchsorted(tax, spv)
-    nt = len(tax)
-
-    def scatter(idx, vals):
-        a = np.zeros(nt, dtype=np.int64)
-        np.add.at(a, idx, vals)
-        return a
-
-    def sfx(a):
-        # inclusive suffix sum: Σ_{t' >= t} (the (tot − pre) twin)
-        return np.cumsum(a[::-1])[::-1]
-
-    nano = 1e9
-    d_t = scatter(xi, wv * dv)
-    evm = d_t > 0
-    s_t = [
-        scatter(
-            xi, wv * dv * round_half_up(xv[j] * nano).astype(np.int64)
-        )
-        for j in range(p)
-    ]
-    beta = [0.0] * p
-    info = None
-    for _ in range(iters):
-        xb = np.zeros(len(wv))
-        for j in range(p):
-            xb = xb + beta[j] * xv[j]
-        r = np.exp(xb)
-        r0 = round_half_up(r * nano).astype(np.int64)
-        r1 = [
-            round_half_up(r * xv[j] * nano).astype(np.int64)
-            for j in range(p)
-        ]
-        r2 = {
-            (j, k): round_half_up(r * xv[j] * xv[k] * nano).astype(
-                np.int64
-            )
-            for j in range(p)
-            for k in range(j, p)
-        }
-
-        def risk(vcell):
-            # at risk at t: stop >= t minus start >= t (exact longs)
-            v = vcell * wv
-            return (sfx(scatter(xi, v)) - sfx(scatter(si, v))).astype(
-                np.float64
-            )
-
-        s0 = risk(r0)
-        s1 = [risk(r1[j]) for j in range(p)]
-        s2 = {jk: risk(v) for jk, v in r2.items()}
-        gsum = np.zeros(p)
-        isum = np.zeros((p, p))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            if ties == "efron":
-                e0 = scatter(xi, wv * dv * r0).astype(np.float64)
-                e1 = [
-                    scatter(xi, wv * dv * r1[j]).astype(np.float64)
-                    for j in range(p)
-                ]
-                e2 = {
-                    jk: scatter(xi, wv * dv * v).astype(np.float64)
-                    for jk, v in r2.items()
-                }
-                idx = np.flatnonzero(evm)
-                reps = d_t[idx]
-                rowg = np.repeat(idx, reps)
-                el = (
-                    np.concatenate(
-                        [np.arange(k, dtype=np.int64) for k in reps]
-                    )
-                    if len(reps)
-                    else np.zeros(0, dtype=np.int64)
-                )
-                dt = d_t[rowg].astype(np.float64)
-                frac = el.astype(np.float64) / dt
-                s0l = s0[rowg] - frac * e0[rowg]
-                shr1 = [
-                    s1[j][rowg] - frac * e1[j][rowg] for j in range(p)
-                ]
-                for j in range(p):
-                    term = s_t[j][rowg] / nano / dt - shr1[j] / s0l
-                    gsum[j] = (
-                        round_half_up(term * nano)
-                        .astype(np.int64)
-                        .sum()
-                        / 1e9
-                    )
-                for j in range(p):
-                    for k in range(j, p):
-                        s2l = s2[(j, k)][rowg] - frac * e2[(j, k)][rowg]
-                        term = s2l / s0l - (shr1[j] / s0l) * (
-                            shr1[k] / s0l
-                        )
-                        isum[j, k] = isum[k, j] = (
-                            round_half_up(term * nano)
-                            .astype(np.int64)
-                            .sum()
-                            / 1e9
-                        )
-            else:
-                dtf = d_t.astype(np.float64)
-                for j in range(p):
-                    term = s_t[j] / nano - dtf * (s1[j] / s0)
-                    gsum[j] = (
-                        round_half_up(term[evm] * nano)
-                        .astype(np.int64)
-                        .sum()
-                        / 1e9
-                    )
-                for j in range(p):
-                    for k in range(j, p):
-                        term = dtf * (
-                            s2[(j, k)] / s0
-                            - (s1[j] / s0) * (s1[k] / s0)
-                        )
-                        isum[j, k] = isum[k, j] = (
-                            round_half_up(term[evm] * nano)
-                            .astype(np.int64)
-                            .sum()
-                            / 1e9
-                        )
-        info = isum
-        step = np.linalg.solve(info, gsum)
-        beta = [round(b + s, 9) for b, s in zip(beta, step)]
-    if return_se:
-        cov = np.linalg.inv(info)
-        se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(p)]
-        return beta, se
-    return beta
-
-
 def cox_ph_time_dependent(
     df: DataFrame,
     feature_cols: Sequence[str],
@@ -5783,269 +5460,33 @@ def cox_ph_time_dependent(
 
         Σ_{start < t ≤ stop} m  =  Σ_{stop ≥ t} m − Σ_{start ≥ t} m
 
-    so the machinery is ``cox_ph``'s exactly, with each episode
-    contributing its nano-rounded moments TWICE — positively at its
-    stop time, negatively (via the second suffix) at its start time —
-    in ONE unioned cell aggregate + ONE multi-column
-    ``global_prefix_sum`` per iteration. With every episode starting
-    at 0 the start-suffix vanishes at all event times and the fit is
-    BIT-IDENTICAL to ``cox_ph`` (pinned in tests, Breslow and Efron
-    both); the constant-covariate split invariance (splitting any
-    episode at an arbitrary interior time leaves β unchanged) is also
-    pinned.
+    so the machinery is ``cox_ph``'s exactly (``_cox_fit``): each
+    episode is an exit row at its stop time (carrying the event) and
+    an entry row at its start time whose moments count NEGATIVELY, and
+    the risk set at t is the signed suffix sum over times ≥ t. With
+    every episode starting at 0 the entry rows vanish from every event
+    time's suffix and the fit is BIT-IDENTICAL to ``cox_ph`` (pinned in
+    tests, Breslow and Efron both); the constant-covariate split
+    invariance (splitting any episode at an arbitrary interior time
+    leaves β unchanged) is also pinned.
 
     ``ties``: "breslow" or "efron" (event-subject moments come from
     stop rows only, so Efron's within-tie shrinkage is unchanged).
     ``return_se=True`` → (β, se) from the final information matrix
     (the ``cox_ph`` penultimate-iterate convention). Returns
-    [β_1, ..., β_p] otherwise. Requires iters >= 1 and start < stop
-    on every episode (raises on violations at plan build).
+    [β_1, ..., β_p] otherwise. Complete cases only (rows with a
+    null/NaN feature, start, stop or event are dropped). Requires
+    iters >= 1 and start < stop on every episode (a named in-plan
+    error otherwise); an empty cohort raises
+    ``cox_ph_time_dependent: empty input``.
 
     Scale: identical to ``cox_ph`` — cells ≤ 2× #distinct times,
     driver sees p + p(p+1)/2 numbers per iteration.
     """
-    import numpy as np
-
-    if ties not in ("breslow", "efron"):
-        raise ValueError(f"ties must be 'breslow' or 'efron', got {ties!r}")
-    iters = int(iters)
-    if iters < 1:
-        raise ValueError("cox_ph_time_dependent: iters must be >= 1")
-    feats = list(feature_cols)
-    p = len(feats)
-    beta = [0.0] * p
-    nano = F.lit(1000000000.0)
-
-    # r11 driver-solve fast path (driverfit.py; the cox_ph_counting
-    # discipline on this fold's own suffix-difference lattice):
-    # episodes collapse to (x-pattern, start, stop, event) cells —
-    # bounded for grid-valued registry times — and the merged
-    # start/stop axis plus the whole Newton loop run on the driver,
-    # bit-identical to the distributed loop below (pinned in
-    # tests/test_driverfit.py, Breslow + Efron + SE). start >= stop
-    # raises the same named error the in-plan guard carries; null/NaN
-    # cells fall back to the distributed fold's null-skip semantics.
-    _proj = df.select(
-        *[
-            F.col(c).cast("double").alias(f"_x{j}")
-            for j, c in enumerate(feats)
-        ],
-        F.col(start_col).cast("double").alias("_st"),
-        F.col(stop_col).cast("double").alias("_sp"),
-        F.col(event_col).cast("long").alias("_d"),
+    return _cox_fit(
+        "cox_ph_time_dependent", df, feature_cols, (start_col, stop_col),
+        event_col, iters, ties, None, return_se,
     )
-    _pdfc = collect_cells(
-        _proj,
-        _proj.columns,
-        [f"_x{j}" for j in range(p)] + ["_st", "_sp"],
-        ["_d"],
-    )
-    if _pdfc is not None:
-        return _cox_td_driver_fit(_pdfc, p, iters, ties, return_se)
-
-    # the guard lives inside _tm so Catalyst's column pruning can
-    # never drop it: every episode's stop time evaluates the check
-    bad_len = (
-        F.col(start_col).cast("double") >= F.col(stop_col).cast("double")
-    )
-    guarded_stop = F.when(
-        bad_len,
-        F.raise_error(
-            F.lit("cox_ph_time_dependent: episode with start >= stop")
-        ).cast(df.schema[stop_col].dataType),
-    ).otherwise(F.col(stop_col))
-    checked = df
-    stops = checked.select(
-        guarded_stop.alias("_tm"),
-        F.lit(1).alias("_is_stop"),
-        F.col(event_col).cast("long").alias("_ev"),
-        *[F.col(c).cast("double").alias(f"_x{j}") for j, c in enumerate(feats)],
-    )
-    starts = checked.select(
-        F.col(start_col).alias("_tm"),
-        F.lit(0).alias("_is_stop"),
-        F.lit(0).cast("long").alias("_ev"),
-        *[F.col(c).cast("double").alias(f"_x{j}") for j, c in enumerate(feats)],
-    )
-    # r10: pin the episode frame once — the union is already the
-    # narrow projection, and every Newton iteration re-derived it
-    # (and the upstream plan) otherwise
-    ep = stops.unionAll(starts).localCheckpoint(eager=False)
-
-    for _ in range(iters):
-        xb = F.lit(0.0)
-        for j in range(p):
-            xb = xb + F.lit(beta[j]) * F.col(f"_x{j}")
-        r = F.exp(xb)
-        is_stop = F.col("_is_stop") == 1
-        zero = F.lit(0).cast("long")
-
-        def side(expr, stop_side):
-            cond = is_stop if stop_side else ~is_stop
-            return F.sum(F.when(cond, expr).otherwise(zero))
-
-        ev = F.col("_ev")
-        aggs = [
-            F.sum(ev).alias("d_t"),
-            side(F.round(r * nano, 0).cast("long"), True).alias("a0"),
-            side(F.round(r * nano, 0).cast("long"), False).alias("b0"),
-        ]
-        for j in range(p):
-            x = F.col(f"_x{j}")
-            aggs.append(
-                F.sum(ev * F.round(x * nano, 0).cast("long")).alias(
-                    f"s{j}"
-                )
-            )
-            aggs.append(
-                side(
-                    F.round(r * x * nano, 0).cast("long"), True
-                ).alias(f"a1_{j}")
-            )
-            aggs.append(
-                side(
-                    F.round(r * x * nano, 0).cast("long"), False
-                ).alias(f"b1_{j}")
-            )
-        for j in range(p):
-            for k in range(j, p):
-                xx = F.col(f"_x{j}") * F.col(f"_x{k}")
-                aggs.append(
-                    side(
-                        F.round(r * xx * nano, 0).cast("long"), True
-                    ).alias(f"a2_{j}_{k}")
-                )
-                aggs.append(
-                    side(
-                        F.round(r * xx * nano, 0).cast("long"), False
-                    ).alias(f"b2_{j}_{k}")
-                )
-        if ties == "efron":
-            aggs.append(
-                F.sum(ev * F.round(r * nano, 0).cast("long")).alias("e0")
-            )
-            for j in range(p):
-                aggs.append(
-                    F.sum(
-                        ev
-                        * F.round(r * F.col(f"_x{j}") * nano, 0).cast(
-                            "long"
-                        )
-                    ).alias(f"e1_{j}")
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    aggs.append(
-                        F.sum(
-                            ev
-                            * F.round(
-                                r * F.col(f"_x{j}") * F.col(f"_x{k}")
-                                * nano,
-                                0,
-                            ).cast("long")
-                        ).alias(f"e2_{j}_{k}")
-                    )
-        cells = ep.groupBy("_tm").agg(*aggs)
-
-        pairs = (
-            [("a0", "b0")]
-            + [(f"a1_{j}", f"b1_{j}") for j in range(p)]
-            + [
-                (f"a2_{j}_{k}", f"b2_{j}_{k}")
-                for j in range(p)
-                for k in range(j, p)
-            ]
-        )
-        vcols = [v for pair in pairs for v in pair]
-        pre = global_prefix_sum(
-            cells, "_tm", vcols, [f"_pre_{v}" for v in vcols],
-            totals_alias=[f"_tot_{v}" for v in vcols],
-        )
-
-        def suffix(a, b):
-            # at risk at t: stop >= t minus start >= t
-            return (F.col(f"_tot_{a}") - F.col(f"_pre_{a}")) - (
-                F.col(f"_tot_{b}") - F.col(f"_pre_{b}")
-            )
-
-        s0 = suffix("a0", "b0")
-        d_t = F.col("d_t")
-        out_aggs = []
-        if ties == "efron":
-            dd = pre.filter(d_t > 0).withColumn(
-                "_l", F.explode(F.sequence(F.lit(0), d_t - 1))
-            )
-            frac = F.col("_l").cast("double") / d_t
-            s0l = s0 - frac * F.col("e0")
-
-            def shrunk1(j):
-                return suffix(f"a1_{j}", f"b1_{j}") - frac * F.col(
-                    f"e1_{j}"
-                )
-
-            for j in range(p):
-                term = F.col(f"s{j}") / nano / d_t - shrunk1(j) / s0l
-                out_aggs.append(
-                    F.sum(F.round(term * nano, 0).cast("long")).alias(
-                        f"g{j}"
-                    )
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    s2l = suffix(f"a2_{j}_{k}", f"b2_{j}_{k}") - frac * F.col(
-                        f"e2_{j}_{k}"
-                    )
-                    term = (
-                        s2l / s0l
-                        - (shrunk1(j) / s0l) * (shrunk1(k) / s0l)
-                    )
-                    out_aggs.append(
-                        F.sum(
-                            F.round(term * nano, 0).cast("long")
-                        ).alias(f"i{j}_{k}")
-                    )
-            row = dd.agg(*out_aggs).collect()[0]
-        else:
-            for j in range(p):
-                term = (
-                    F.col(f"s{j}") / nano
-                    - d_t * (suffix(f"a1_{j}", f"b1_{j}") / s0)
-                )
-                out_aggs.append(
-                    F.sum(
-                        F.when(
-                            d_t > 0, F.round(term * nano, 0).cast("long")
-                        ).otherwise(F.lit(0).cast("long"))
-                    ).alias(f"g{j}")
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    term = d_t * (
-                        suffix(f"a2_{j}_{k}", f"b2_{j}_{k}") / s0
-                        - (suffix(f"a1_{j}", f"b1_{j}") / s0)
-                        * (suffix(f"a1_{k}", f"b1_{k}") / s0)
-                    )
-                    out_aggs.append(
-                        F.sum(
-                            F.when(
-                                d_t > 0,
-                                F.round(term * nano, 0).cast("long"),
-                            ).otherwise(F.lit(0).cast("long"))
-                        ).alias(f"i{j}_{k}")
-                    )
-            row = pre.agg(*out_aggs).collect()[0]
-        g = np.array([row[f"g{j}"] / 1e9 for j in range(p)])
-        info = np.zeros((p, p))
-        for j in range(p):
-            for k in range(j, p):
-                info[j, k] = info[k, j] = row[f"i{j}_{k}"] / 1e9
-        step = np.linalg.solve(info, g)
-        beta = [round(b + s, 9) for b, s in zip(beta, step)]
-    if return_se:
-        cov = np.linalg.inv(info)
-        se = [round(float(np.sqrt(cov[j, j])), 9) for j in range(p)]
-        return beta, se
-    return beta
 
 
 def life_years_lost(
@@ -11718,295 +11159,24 @@ def cox_ph_counting(
       subject's successive events; subjects re-enter the risk set
       after each event).
 
-    The risk set at event time t is {i : start_i < t ≤ stop_i}, so
-    risk-mass moments at t are a DIFFERENCE of two exclusive
-    prefixes on a merged time axis:
-
-        S·(t) = entered(<t) − exited(<t),
-
-    with entry cells keyed at start (strict: mass at start == t is
-    not yet at risk) and exit cells keyed at stop (a subject with
-    stop == t IS at risk at t). Per Newton iteration: TWO map-side
-    cell collapses (entry / exit moments, per-episode nano-rounded
-    longs), a full-outer merge of the two cell families, ONE
-    multi-column ``global_prefix_sum`` over the merged axis, then
-    the gradient/information fold on event rows — the exact cox_ph
-    lattice contract, bit-identical under any partitioning. Breslow
-    ties only (the Andersen-Gill convention; Efron with delayed
-    entry is not supported here). With start ≡ 0 the risk sets — and
-    the fitted β, by the shared lattice — coincide with ``cox_ph``'s
-    (pinned in tests). Episodes need start < stop (named in-plan
-    error). Returns β (or (β, se) — model-based Wald; for
-    Andersen-Gill data use a cluster bootstrap, the reuse caveat of
+    The risk set at event time t is {i : start_i < t ≤ stop_i}: an
+    episode counts at its stop time (a subject with stop == t IS at
+    risk at t) and leaves again, negatively, at its start time (mass
+    at start == t is not yet at risk). This is
+    ``cox_ph_time_dependent``'s core (``_cox_fit``) with Breslow ties
+    (the Andersen-Gill convention; Efron with delayed entry is not
+    offered here) — the exact cox_ph lattice contract, bit-identical
+    under any partitioning. With start ≡ 0 the risk sets — and the
+    fitted β, by the shared lattice — coincide with ``cox_ph``'s
+    (pinned in tests). Complete cases only; episodes need start < stop
+    (named in-plan error). Returns β (or (β, se) — model-based Wald;
+    for Andersen-Gill data use a cluster bootstrap, the reuse caveat of
     ``cox_ph_robust`` applies doubly here, documented).
     """
-    import numpy as np
-
-    iters = int(iters)
-    if iters < 1:
-        raise ValueError("cox_ph_counting: iters must be >= 1")
-    feats = list(feature_cols)
-    p = len(feats)
-    beta = [0.0] * p
-    nano = F.lit(1000000000.0)
-
-    st = F.col(start_col).cast("double")
-    sp = F.col(stop_col).cast("double")
-    sp_ok = F.when(
-        sp <= st,
-        F.raise_error(
-            F.lit("cox_ph_counting: episodes need start < stop")
-        ).cast("double"),
-    ).otherwise(sp)
-
-    # r10 driver-solve fast path (driverfit.py): bounded (x-pattern,
-    # start, stop, event) episode cells — the merged entered(<t) −
-    # exited(<t) axis and the whole Newton loop run on the driver.
-    # Bit-identical to the distributed loop below (pinned in tests).
-    _proj = df.select(
-        *[
-            F.col(c).cast("double").alias(f"_x{j}")
-            for j, c in enumerate(feats)
-        ],
-        st.alias("_st"),
-        sp.alias("_sp"),
-        F.col(event_col).cast("long").alias("_d"),
+    return _cox_fit(
+        "cox_ph_counting", df, feature_cols, (start_col, stop_col),
+        event_col, iters, "breslow", None, return_se,
     )
-    # _d screened too: a null event would NaN-cast to int64 garbage in
-    # the twin where the distributed long sums null-skip
-    _pdfc = collect_cells(
-        _proj,
-        _proj.columns,
-        [f"_x{j}" for j in range(p)] + ["_st", "_sp"],
-        ["_d"],
-    )
-    if _pdfc is not None:
-        if (
-            _pdfc["_sp"].to_numpy() <= _pdfc["_st"].to_numpy()
-        ).any():
-            raise ValueError(
-                "cox_ph_counting: episodes need start < stop"
-            )
-        wv = _pdfc["_w"].to_numpy().astype(np.int64)
-        dv = _pdfc["_d"].to_numpy().astype(np.int64)
-        stv = _pdfc["_st"].to_numpy().astype(np.float64)
-        spv = _pdfc["_sp"].to_numpy().astype(np.float64)
-        xv = [
-            _pdfc[f"_x{j}"].to_numpy().astype(np.float64)
-            for j in range(p)
-        ]
-        tax = np.unique(np.concatenate([stv, spv]))
-        si = np.searchsorted(tax, stv)
-        xi = np.searchsorted(tax, spv)
-        nt = len(tax)
-
-        def scatter(idx, vals):
-            a = np.zeros(nt, dtype=np.int64)
-            np.add.at(a, idx, vals)
-            return a
-
-        def excl(a):
-            pr = np.cumsum(a)
-            return np.concatenate(([np.int64(0)], pr[:-1]))
-
-        d_t = scatter(xi, wv * dv)
-        evm = d_t > 0
-        dtf = d_t.astype(np.float64)
-        s_t = [
-            scatter(
-                xi,
-                wv * dv * round_half_up(xv[j] * 1e9).astype(np.int64),
-            ).astype(np.float64)
-            for j in range(p)
-        ]
-        info = None
-        for _ in range(iters):
-            xb = np.zeros(len(wv))
-            for j in range(p):
-                xb = xb + beta[j] * xv[j]
-            r = np.exp(xb)
-
-            def mom(vcell):
-                # vcell: per-cell rounded lattice value × count —
-                # the product order inside matches the fold below
-                v = vcell * wv
-                return (
-                    excl(scatter(si, v)) - excl(scatter(xi, v))
-                ).astype(np.float64)
-
-            s0 = mom(round_half_up(r * 1e9).astype(np.int64))
-            s1 = [
-                mom(round_half_up(r * xv[j] * 1e9).astype(np.int64))
-                for j in range(p)
-            ]
-            s2 = {
-                (j, k): mom(
-                    round_half_up(r * xv[j] * xv[k] * 1e9).astype(
-                        np.int64
-                    )
-                )
-                for j in range(p)
-                for k in range(j, p)
-            }
-            gsum = np.zeros(p)
-            isum = np.zeros((p, p))
-            # axis points with nobody at risk (s0 = 0) are never
-            # event rows; the mask drops them before rounding
-            with np.errstate(divide="ignore", invalid="ignore"):
-                for j in range(p):
-                    term = s_t[j] / 1e9 - dtf * s1[j] / s0
-                    gsum[j] = (
-                        round_half_up(term[evm] * 1e9)
-                        .astype(np.int64)
-                        .sum()
-                        / 1e9
-                    )
-                for j in range(p):
-                    for k in range(j, p):
-                        term = dtf * (
-                            s2[(j, k)] / s0
-                            - (s1[j] / s0) * (s1[k] / s0)
-                        )
-                        isum[j, k] = isum[k, j] = (
-                            round_half_up(term[evm] * 1e9)
-                            .astype(np.int64)
-                            .sum()
-                            / 1e9
-                        )
-            info = isum
-            step = np.linalg.solve(info, gsum)
-            beta = [round(b + s, 9) for b, s in zip(beta, step)]
-        if return_se:
-            cov = np.linalg.inv(info)
-            return beta, [
-                round(float(np.sqrt(cov[j, j])), 9)
-                for j in range(p)
-            ]
-        return beta
-
-    # r10: pin the narrow episode projection once — each Newton
-    # iteration collapses it TWICE (entry + exit cells) and would
-    # otherwise re-derive the upstream plan 2×iters times
-    df = df.select(
-        *dict.fromkeys(feats + [start_col, stop_col, event_col])
-    ).localCheckpoint(eager=False)
-
-    info = None
-    for _ in range(iters):
-        xb = F.lit(0.0)
-        for j, c in enumerate(feats):
-            xb = xb + F.lit(beta[j]) * F.col(c).cast("double")
-        r = F.exp(xb)
-        ev = F.col(event_col).cast("long")
-
-        def moments(prefix):
-            aggs = [
-                F.sum(F.round(r * nano, 0).cast("long")).alias(
-                    f"{prefix}0"
-                )
-            ]
-            for j, c in enumerate(feats):
-                x = F.col(c).cast("double")
-                aggs.append(
-                    F.sum(
-                        F.round(r * x * nano, 0).cast("long")
-                    ).alias(f"{prefix}1_{j}")
-                )
-            for j in range(p):
-                for k in range(j, p):
-                    xj = F.col(feats[j]).cast("double")
-                    xk = F.col(feats[k]).cast("double")
-                    aggs.append(
-                        F.sum(
-                            F.round(r * xj * xk * nano, 0).cast(
-                                "long"
-                            )
-                        ).alias(f"{prefix}2_{j}_{k}")
-                    )
-            return aggs
-
-        enter = df.groupBy(st.alias("_t")).agg(*moments("e"))
-        exit_aggs = moments("x") + [F.sum(ev).alias("d_t")]
-        for j, c in enumerate(feats):
-            exit_aggs.append(
-                F.sum(
-                    ev
-                    * F.round(
-                        F.col(c).cast("double") * nano, 0
-                    ).cast("long")
-                ).alias(f"s{j}")
-            )
-        exits = df.groupBy(sp_ok.alias("_t")).agg(*exit_aggs)
-
-        ecols = ["e0"] + [f"e1_{j}" for j in range(p)] + [
-            f"e2_{j}_{k}" for j in range(p) for k in range(j, p)
-        ]
-        xcols = ["x0"] + [f"x1_{j}" for j in range(p)] + [
-            f"x2_{j}_{k}" for j in range(p) for k in range(j, p)
-        ]
-        merged = enter.join(exits, "_t", "full_outer").fillna(
-            0, subset=ecols + xcols + ["d_t"]
-            + [f"s{j}" for j in range(p)]
-        )
-        pre = global_prefix_sum(
-            merged,
-            "_t",
-            ecols + xcols,
-            [f"_pe_{c}" for c in ecols] + [f"_px_{c}" for c in xcols],
-        )
-
-        def risk(e_c, x_c):
-            return (F.col(f"_pe_{e_c}") - F.col(f"_px_{x_c}")).cast(
-                "double"
-            )
-
-        s0 = risk("e0", "x0")
-        d_t = F.col("d_t")
-        out_aggs = []
-        for j in range(p):
-            term = (
-                F.col(f"s{j}") / nano
-                - d_t * risk(f"e1_{j}", f"x1_{j}") / s0
-            )
-            out_aggs.append(
-                F.sum(
-                    F.when(
-                        d_t > 0,
-                        F.round(term * nano, 0).cast("long"),
-                    ).otherwise(F.lit(0).cast("long"))
-                ).alias(f"g{j}")
-            )
-        for j in range(p):
-            for k in range(j, p):
-                t2 = risk(f"e2_{j}_{k}", f"x2_{j}_{k}")
-                term = d_t * (
-                    t2 / s0
-                    - (risk(f"e1_{j}", f"x1_{j}") / s0)
-                    * (risk(f"e1_{k}", f"x1_{k}") / s0)
-                )
-                out_aggs.append(
-                    F.sum(
-                        F.when(
-                            d_t > 0,
-                            F.round(term * nano, 0).cast("long"),
-                        ).otherwise(F.lit(0).cast("long"))
-                    ).alias(f"i{j}_{k}")
-                )
-        row = pre.agg(*out_aggs).collect()[0]
-        g = np.array([row[f"g{j}"] / 1e9 for j in range(p)])
-        info = np.zeros((p, p))
-        for j in range(p):
-            for k in range(j, p):
-                info[j, k] = info[k, j] = row[f"i{j}_{k}"] / 1e9
-        step = np.linalg.solve(info, g)
-        beta = [round(b + s, 9) for b, s in zip(beta, step)]
-
-    if return_se:
-        cov = np.linalg.inv(info)
-        return beta, [
-            round(float(np.sqrt(cov[j, j])), 9) for j in range(p)
-        ]
-    return beta
 
 
 def gray_test_stratified(

@@ -68,6 +68,12 @@ def test_cox_driver_path_bit_equal(spark, distributed, kw):
     with distributed():
         slow = sv.cox_ph(d, ["x1", "x2"], iters=4, return_se=True, **kw)
     assert fast == slow
+    if kw == {"ties": "efron", "strata_cols": ["st"]}:
+        # 1 partition == k partitions: keys and strata span Arrow
+        # batches and range partitions, joined by the scan's carries
+        with distributed(), _arrow_batches(spark, 7):
+            k = sv.cox_ph(d, ["x1", "x2"], iters=4, return_se=True, **kw)
+        assert k == fast
 
 
 def test_glm_driver_paths_bit_equal(spark, distributed):
@@ -427,9 +433,10 @@ def test_cox_driver_path_half_lattice_ties(spark, distributed):
 
 
 def test_null_screens_force_distributed_fallback(spark, distributed):
-    # nulls in features/duration/event must force the distributed
-    # fold (which null-skips) — the numpy twin would garbage-cast
-    # NaN to INT64_MIN and split NaN durations into per-row groups
+    # nulls in features/duration/event no longer force a fallback:
+    # cox_ph fits complete cases (R's na.omit) on both paths, so a row
+    # with a null leaves every moment — its event included — and both
+    # paths equal the fit on the dropna'd frame
     d = spark.range(3000).select(
         F.when(F.col("id") % 17 == 0, None)
         .otherwise((F.col("id") % 7) / 7.0)
@@ -452,6 +459,7 @@ def test_null_screens_force_distributed_fallback(spark, distributed):
     with distributed():
         slow = sv.cox_ph(d, ["x1"], iters=3, return_se=True)
     assert fast == slow
+    assert fast == sv.cox_ph(d.dropna(), ["x1"], iters=3, return_se=True)
 
 
 def test_frailty_null_cluster_forces_fallback(spark, distributed):
@@ -671,6 +679,10 @@ def test_cox_robust_driver_path_bit_equal(spark, distributed, kw):
 
 _EMPTY_FITS = {
     "cox_ph": lambda d: sv.cox_ph(d, ["x"], iters=2),
+    "cox_ph_counting": lambda d: sv.cox_ph_counting(d, ["x"], iters=2),
+    "cox_ph_time_dependent": lambda d: sv.cox_ph_time_dependent(
+        d, ["x"], iters=2
+    ),
     "fine_gray": lambda d: sv.fine_gray(d, ["x"], iters=2),
     "weibull_aft": lambda d: sv.weibull_aft(d, ["x"], iters=2),
     "loglogistic_aft": lambda d: sv.loglogistic_aft(d, ["x"], iters=2),
@@ -694,6 +706,8 @@ def test_empty_cohort_named_error(spark, distributed, fit, path):
         (F.col("id") % 4 > 0).cast("int").alias("event"),
         (F.col("id") % 3).cast("int").alias("cause"),
         (F.col("id") % 6).cast("double").alias("y"),
+        F.lit(0.0).alias("start"),
+        ((F.col("id") % 9) + 1).cast("double").alias("stop"),
     ).filter("id < 0")
     with pytest.raises(ValueError, match=f"^{fit}: empty input"):
         if path == "driver":
@@ -704,6 +718,10 @@ def test_empty_cohort_named_error(spark, distributed, fit, path):
 
 
 _OVERFLOW_FITS = {
+    "cox_ph": lambda d: sv.cox_ph(d, ["x"], iters=2),
+    "cox_ph_time_dependent": lambda d: sv.cox_ph_time_dependent(
+        d, ["x"], iters=2
+    ),
     "glm_poisson": lambda d: st.glm_poisson(d, ["x"], "y", iters=2),
     "weibull_aft": lambda d: sv.weibull_aft(d, ["x"], iters=2),
 }
@@ -718,6 +736,8 @@ def test_lattice_overflow_named_error(spark, distributed, fit):
         (F.col("id") % 6).cast("double").alias("y"),
         ((F.col("id") % 9) + 1).cast("double").alias("duration"),
         (F.col("id") % 4 > 0).cast("int").alias("event"),
+        F.lit(0.0).alias("start"),
+        ((F.col("id") % 9) + 1).cast("double").alias("stop"),
     )
     with pytest.raises(ValueError, match=f"^{fit}: lattice overflow"):
         _OVERFLOW_FITS[fit](d)
@@ -725,6 +745,43 @@ def test_lattice_overflow_named_error(spark, distributed, fit):
         ValueError, match=f"^{fit}: lattice overflow"
     ):
         _OVERFLOW_FITS[fit](d)
+
+
+def test_cox_wide_sums_match_float_reference(spark, distributed):
+    # x ≈ ±1e4: every x²·1e9 term fits int64 (durations to 3 dp keep
+    # ties, and so the per-time terms, small) but 2,000 of them do not.
+    # The sums must go wide instead of wrapping, and both paths must
+    # match a float64 Newton reference over the same two steps.
+    import numpy as np
+
+    i = np.arange(2000)
+    g = i % 2
+    x = (2 * g - 1) * 1e4 + i % 5
+    t = np.round(-np.log((i % 997 + 1) / 998.0) / np.exp(0.7 * g), 3) + 1e-3
+    e = (i % 4 > 0).astype(int)
+    d = spark.createDataFrame(
+        [(float(a), float(b), int(c)) for a, b, c in zip(x, t, e)],
+        "x double, duration double, event int",
+    )
+    beta = 0.0
+    for _ in range(2):  # Breslow Newton, float64, one subject per row
+        r = np.exp(beta * x)
+        grad = info = 0.0
+        for tt in np.unique(t[e == 1]):
+            at = t >= tt
+            s0, s1 = r[at].sum(), (r * x)[at].sum()
+            s2 = (r * x * x)[at].sum()
+            dead = (t == tt) & (e == 1)
+            grad += x[dead].sum() - dead.sum() * s1 / s0
+            info += dead.sum() * (s2 / s0 - (s1 / s0) ** 2)
+        beta += grad / info
+    fast = sv.cox_ph(d, ["x"], iters=2)
+    with distributed():
+        slow = sv.cox_ph(d, ["x"], iters=2)
+    assert fast == slow
+    assert abs(fast[0] - beta) < 1e-6, (fast, beta)
+    with pytest.raises(ValueError, match="^cox_ph: iters must be >= 1"):
+        sv.cox_ph(d, ["x"], iters=0)
 
 
 def _screen_cohort(spark):
@@ -815,6 +872,7 @@ _SCREEN_FITS = {
 # moment, so the fit equals the fit on the dropna'd frame
 _COMPLETE_CASE_FITS = {
     "weibull_aft", "loglogistic_aft", "glm_logistic", "glm_poisson",
+    "cox_ph_time_dependent",
 }
 
 
