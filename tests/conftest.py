@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from contextlib import contextmanager
 
@@ -18,7 +19,17 @@ def spark():
     # measured 14% faster on the densest test file (r11, the
     # OPTIMIZATION_r11.md test-suite section). Tests that reason about
     # partition counts read defaultParallelism dynamically.
-    s = get_spark("tests", shuffle_partitions=8, master="local[8]")
+    # The workers start with pyworker/sitecustomize.py: it stops every
+    # pandas-UDF task from re-reading pyspark.zip's directory 16 times
+    # on Python < 3.12, which halved the CPU of the UDF-heavy tests
+    # (4 vCPUs: 726 -> 368 CPU-s on 12 of them).
+    workers = os.path.join(os.path.dirname(__file__), "pyworker")
+    s = get_spark(
+        "tests",
+        shuffle_partitions=8,
+        master="local[8]",
+        extra_conf={"spark.executorEnv.PYTHONPATH": workers},
+    )
     yield s
     s.stop()
 
